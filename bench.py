@@ -15,8 +15,13 @@ from __future__ import annotations
 import json
 import multiprocessing
 import os
+import queue
 import sys
 import time
+
+# A burn is 5M integer multiply-adds (under a second on an idle core); a
+# worker that has not reported after this long is dead or starved, not slow.
+BURN_TIMEOUT_S = 120.0
 
 
 def _burn(q):
@@ -80,10 +85,31 @@ def measure_capacity(n_workers: int, with_burn: bool = False):
     t0 = time.perf_counter()
     for p in ps:
         p.start()
-    for p in ps:
-        p.join()
+    try:
+        # Drain the queue before joining: a child blocks in exit until its
+        # queued result is read.
+        burns = []
+        while len(burns) < n_workers:
+            try:
+                burns.append(q.get(timeout=1.0))
+            except queue.Empty:
+                died = [p.exitcode for p in ps if p.exitcode not in (None, 0)]
+                if died:
+                    raise RuntimeError(
+                        f"capacity probe: burn worker died (exit codes {died})"
+                    ) from None
+                if time.perf_counter() - t0 > BURN_TIMEOUT_S:
+                    raise RuntimeError(
+                        f"capacity probe: {n_workers - len(burns)} of {n_workers} "
+                        f"burn workers gave no result in {BURN_TIMEOUT_S:.0f} s"
+                    ) from None
+        for p in ps:
+            p.join(timeout=10.0)
+    finally:
+        for p in ps:
+            if p.is_alive():
+                p.terminate()
     wall = time.perf_counter() - t0
-    burns = [q.get() for _ in range(n_workers)]
     rate = round(n_workers / wall, 3)
     if with_burn:
         return rate, round(sum(burns) / len(burns), 4)

@@ -42,30 +42,21 @@ def eligible_bert(text: Column, max_seq_length: int = 64) -> Column:
 def err_positions(text: Column, probs: Column, prob_threshold: float = 0.9) -> Column:
     """F3 (base_corrector.py:75-86,109-119): indices with prob below
     threshold; NULL probs → the non-prob path marks every position."""
-    empty = F.array().cast("array<int>")
-    idx = F.sequence(F.lit(0), F.size(probs) - 1)
-    # guard size==0: sequence(0,-1) would produce a DESCENDING range
-    by_prob = F.when(
-        F.size(probs) > 0,
-        F.filter(idx, lambda i: F.element_at(probs, i + 1) < F.lit(prob_threshold)),
-    ).otherwise(empty)
-    all_pos = F.when(
-        F.length(text) > 0, F.sequence(F.lit(0), F.length(text) - 1)
-    ).otherwise(empty)
-    return F.when(probs.isNull(), all_pos).otherwise(by_prob)
+    return err_from_key(text, err_prob_key(probs, prob_threshold))
 
 
 def err_prob_key(probs: Column, prob_threshold: float = 0.9) -> Column:
     """The probs-only factor of ``err_positions``: the sub-threshold index
     set for non-null probs (empty for empty probs), and NULL for null
-    probs.  For every (text, probs):
+    probs.  ``err_positions`` is defined as
 
-        err_positions(text, probs, th) == err_from_key(text, err_prob_key(probs, th))
+        err_from_key(text, err_prob_key(probs, th))
 
-    (tests/test_dedup_correction.py pins the identity).  The key is
-    text-extraction-independent, so the dedup plan can compute it natively
-    on raw rows and use it as a join key orders of magnitude smaller than
-    the probs array itself (plans/pipeline._dedup_correct_pipeline)."""
+    so the sub-threshold filter exists once (tests/test_dedup_correction.py
+    pins the identity).  The key is text-extraction-independent, so the
+    dedup plan can compute it natively on raw rows and use it as a join
+    key orders of magnitude smaller than the probs array itself
+    (plans/pipeline._dedup_correct_pipeline)."""
     empty = F.array().cast("array<int>")
     idx = F.sequence(F.lit(0), F.size(probs) - 1)
     by_prob = F.when(

@@ -31,14 +31,26 @@ from pyspark.sql import functions as F
 def order_turns(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     keys = [F.col("conv_id"), F.col("turn_idx")]
     if num_partitions is None:
-        # Explicit partition count: downstream of this exchange run the
-        # Arrow-UDF correction stages, whose cost is per-ROW (Python), not
-        # per-byte — AQE's byte-based partition coalescing would collapse a
-        # small-but-expensive stage onto a handful of cores.  An explicit
-        # count opts this exchange out of coalescing; size it to the
-        # session's shuffle parallelism.
-        spark = df.sparkSession
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        # Explicit count, so AQE's byte-based coalescing leaves this
+        # exchange alone: the Arrow-UDF stages downstream run one Python
+        # task per partition and cost per row, not per byte.
+        #
+        # In local mode the task slots are fixed, so take one partition
+        # per slot.  There each Arrow-UDF task pays a fixed ~0.3 s of slot
+        # time whatever its size, and partitions past the slot count only
+        # add that cost (figures and the workloads they were measured on:
+        # docs/SCALE.md).
+        # On a cluster the slots registered when the plan is built can
+        # undercount what dynamic allocation grants later, so keep the
+        # session's shuffle parallelism, which leaves room to rebalance
+        # straggling tasks.
+        sc = df.sparkSession.sparkContext
+        if sc.master.split("[")[0] == "local":
+            num_partitions = sc.defaultParallelism
+        else:
+            num_partitions = int(
+                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+            )
     df = df.repartitionByRange(num_partitions, *keys)
     return df.sortWithinPartitions(*keys)
 

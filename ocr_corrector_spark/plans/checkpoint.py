@@ -19,8 +19,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_WATERMARK_SCHEMA = "run_id string, bucket int"
 
 
 @dataclass
@@ -36,9 +39,16 @@ class CheckpointedRun:
         )
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
+        # Only a missing watermark table means "nothing committed".  A
+        # table that exists but cannot be read must fail the run: treating
+        # it as empty would reprocess every bucket.  The explicit schema
+        # makes a directory without data files (a first commit that died
+        # before writing one) read as empty instead of failing inference.
         try:
-            wm = spark.read.parquet(self.watermark_path)
-        except Exception:
+            wm = spark.read.schema(_WATERMARK_SCHEMA).parquet(self.watermark_path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return set()
         rows = wm.filter(F.col("run_id") == self.run_id).select("bucket").collect()
         return {r.bucket for r in rows}
@@ -49,7 +59,7 @@ class CheckpointedRun:
 
     def _commit(self, spark: SparkSession, buckets: list[int]) -> None:
         rows = [(self.run_id, int(b)) for b in buckets]
-        spark.createDataFrame(rows, "run_id string, bucket int").coalesce(1).write.mode(
+        spark.createDataFrame(rows, _WATERMARK_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.watermark_path)
 

@@ -11,7 +11,11 @@ Ordering runs FIRST, on the cheap scan: a range shuffle placed after the
 UDFs would re-execute them once more for range-boundary sampling, and the
 UDF stages are narrow (row-order preserving), so sorting the input yields
 sorted output for free.  Range partitioning (vs hash) splits skewed
-conv_ids across contiguous partitions — no hot executor.
+conv_ids across contiguous partitions — no hot executor.  In local mode
+the range shuffle makes one partition per task slot, so each UDF stage
+starts one Python task per slot, because every Arrow-UDF task pays a
+fixed cost whatever its size; on a cluster it keeps the session's
+shuffle parallelism (``order_turns``; measurements in docs/SCALE.md).
 
 The per-biz dispatch mirrors the reference's corrector registry
 (corrector/__init__.py:20-38: biz 'report' → keyword corrector, 'doc' →

@@ -1,9 +1,16 @@
-"""Audit lineage, checkpoint/resume idempotence, and salted reassembly."""
+"""Audit lineage, checkpoint/resume idempotence, ordered-stage
+partitioning, and salted reassembly."""
+
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_corrector_spark.operators.reassemble import reassemble_conversations
+from ocr_corrector_spark.operators.reassemble import (
+    order_turns,
+    reassemble_conversations,
+)
 from ocr_corrector_spark.plans.audit import partition_lineage, write_audit
 from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
@@ -211,3 +218,57 @@ def test_salted_reassembly_spreads_hot_conv(spark, salt_buckets):
     )
     assert out.n_turns == heavy_turns
     assert [t.turn_idx for t in out.turns] == list(range(heavy_turns))
+
+
+def test_ordered_stage_takes_one_partition_per_task_slot(spark, tmp_path):
+    """In local mode order_turns sizes its range shuffle to the task
+    slots, not to spark.sql.shuffle.partitions: every partition past the
+    slot count costs the Arrow-UDF stages one more fixed-cost Python
+    task.  Order stays global because range partitions are contiguous,
+    and a heavy conversation is still split across partitions."""
+    slots = spark.sparkContext.defaultParallelism
+    if slots < 2:
+        pytest.skip("needs at least 2 task slots")
+    # conv-000000 holds ~3/4 of the rows, so it cannot fit in one of
+    # >= 2 balanced range partitions
+    df = gen_transcripts(spark, n_convs=40, heavy_every=1000, heavy_turns=600)
+    assert order_turns(df).rdd.getNumPartitions() == slots
+
+    out = correct_pipeline(df, spark, order_output=True).select(
+        "conv_id", "turn_idx", F.spark_partition_id().alias("pid")
+    )
+    rows = out.collect()
+    keys = [(r.conv_id, r.turn_idx) for r in rows]
+    assert keys == sorted(keys)
+    heavy_pids = {r.pid for r in rows if r.conv_id == "conv-000000"}
+    assert len(heavy_pids) >= 2
+
+    # one checkpoint wave writes one file per range partition per bucket
+    run = CheckpointedRun(
+        "files", str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=2
+    )
+    wave_input = gen_transcripts(spark, n_convs=200)
+    assert run.run(
+        spark,
+        wave_input,
+        lambda d: correct_pipeline(d, spark, keep_mode_col=True),
+        wave_size=2,
+        max_waves=1,
+    ) == 2
+    for bucket in ("bucket=0", "bucket=1"):
+        files = glob.glob(os.path.join(run.output_path, bucket, "part-*"))
+        assert 1 <= len(files) <= slots, (bucket, len(files))
+
+
+def test_unreadable_watermark_fails_instead_of_rerunning(spark, tmp_path):
+    """Only a missing watermark table means nothing is committed.  A
+    directory without data files reads as empty; one holding a file that
+    is not parquet must raise, never report every bucket as pending."""
+    wm = tmp_path / "wm"
+    run = CheckpointedRun("wm1", str(tmp_path / "out"), str(wm), n_buckets=4)
+    assert run.pending_buckets(spark) == [0, 1, 2, 3]
+    wm.mkdir()
+    assert run.pending_buckets(spark) == [0, 1, 2, 3]
+    (wm / "notes.txt").write_text("not a parquet file\n")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run.pending_buckets(spark)
