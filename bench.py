@@ -68,6 +68,41 @@ def subtree_cpu_seconds() -> float:
     return total
 
 
+def gather_worker_results(ps, q, timeout_s: float, what: str) -> list:
+    """Start the processes ``ps``, each of which puts one result on ``q``,
+    and return the results.  The queue is drained before joining (a child
+    blocks in exit until its queued result is read) with a bounded
+    ``get``; raises ``RuntimeError`` when a worker exits non-zero or when
+    ``timeout_s`` passes without every result.  Stragglers are
+    terminated."""
+    t0 = time.perf_counter()
+    for p in ps:
+        p.start()
+    try:
+        out = []
+        while len(out) < len(ps):
+            try:
+                out.append(q.get(timeout=1.0))
+            except queue.Empty:
+                died = [p.exitcode for p in ps if p.exitcode not in (None, 0)]
+                if died:
+                    raise RuntimeError(
+                        f"{what}: worker died (exit codes {died})"
+                    ) from None
+                if time.perf_counter() - t0 > timeout_s:
+                    raise RuntimeError(
+                        f"{what}: {len(ps) - len(out)} of {len(ps)} "
+                        f"workers gave no result in {timeout_s:.0f} s"
+                    ) from None
+        for p in ps:
+            p.join(timeout=10.0)
+    finally:
+        for p in ps:
+            if p.is_alive():
+                p.terminate()
+    return out
+
+
 def measure_capacity(n_workers: int, with_burn: bool = False):
     """Deliverable aggregate CPU capacity for n_workers concurrent pure-
     Python processes (burn-loops/sec) — the shared-host calibration taken
@@ -83,32 +118,7 @@ def measure_capacity(n_workers: int, with_burn: bool = False):
     q = multiprocessing.Queue()
     ps = [multiprocessing.Process(target=_burn, args=(q,)) for _ in range(n_workers)]
     t0 = time.perf_counter()
-    for p in ps:
-        p.start()
-    try:
-        # Drain the queue before joining: a child blocks in exit until its
-        # queued result is read.
-        burns = []
-        while len(burns) < n_workers:
-            try:
-                burns.append(q.get(timeout=1.0))
-            except queue.Empty:
-                died = [p.exitcode for p in ps if p.exitcode not in (None, 0)]
-                if died:
-                    raise RuntimeError(
-                        f"capacity probe: burn worker died (exit codes {died})"
-                    ) from None
-                if time.perf_counter() - t0 > BURN_TIMEOUT_S:
-                    raise RuntimeError(
-                        f"capacity probe: {n_workers - len(burns)} of {n_workers} "
-                        f"burn workers gave no result in {BURN_TIMEOUT_S:.0f} s"
-                    ) from None
-        for p in ps:
-            p.join(timeout=10.0)
-    finally:
-        for p in ps:
-            if p.is_alive():
-                p.terminate()
+    burns = gather_worker_results(ps, q, BURN_TIMEOUT_S, "capacity probe")
     wall = time.perf_counter() - t0
     rate = round(n_workers / wall, 3)
     if with_burn:
@@ -175,18 +185,8 @@ def main() -> None:
     for fr in frames[1:]:
         fr.count()
 
-    # SPARK_GRAFT_DEDUP_CORRECTION=1 switches the flagship to the
-    # distinct→correct→join plan (plans/pipeline dedup_correction): ~35%
-    # less engine CPU at local[4] (54 vs 81 s, same-window A/B) but extra
-    # stage barriers cap utilization at width, so the per-row plan stays
-    # the default benchmark job; the dedup plan's own numbers are reported
-    # separately as flagship_dedup.
-    dedup_corr = os.environ.get("SPARK_GRAFT_DEDUP_CORRECTION", "0") == "1"
-
     def run_pipeline(frame):
-        corrected = correct_pipeline(
-            frame, spark, order_output=True, dedup_correction=dedup_corr
-        )
+        corrected = correct_pipeline(frame, spark, order_output=True)
         # checksum forces extraction + correction + the ordering shuffle
         corrected.agg(F.sum(F.length("text_corrected")), F.count(F.lit(1))).collect()
 
@@ -274,9 +274,8 @@ def main() -> None:
     flagship_engine_cpu = best["engine_cpu_sec"]
     flagship_probe_burn = round((best["burn_pre"] + best["burn_post"]) / 2, 4)
 
-    # fused single-Arrow-pass variant (operators/fused.py) — fresh seeds so
-    # the staged reps' row memo can't serve it.  Skipped in scaling rounds
-    # (SKIP_QUERIES): the scaling ratio only needs the staged flagship.
+    # The scorer-backend variants below are skipped in scaling rounds
+    # (SKIP_QUERIES): the scaling ratio only needs the flagship.
     if scaling_mode:
         _report(
             timings, sf, cpus, n_turns, flagship_reps, caps, correct_sec,
@@ -287,54 +286,9 @@ def main() -> None:
         spark.stop()
         return
 
-    from ocr_corrector_spark.operators.fused import fused_correct
-
-    fused_frames = [
-        (
-            spark.read.parquet(os.path.join(input_dir, f"seed{s}"))
-            if input_dir and os.path.isdir(os.path.join(input_dir, f"seed{s}"))
-            else gen_transcripts(spark, n_convs=n_convs, seed=s + 50).repartition(128)
-        ).persist()
-        for s in range(seed_base + 10, seed_base + 10 + n_reps)
-    ]
-    for fr in fused_frames:
-        fr.count()
-    fused_reps = []
-    for fr in fused_frames:
-        t0 = time.perf_counter()
-        fused_correct(fr, spark).agg(
-            F.sum(F.length("text_corrected")), F.count(F.lit(1))
-        ).collect()
-        fused_reps.append(time.perf_counter() - t0)
-    fused_sec = min(fused_reps)
-    timings["flagship_fused"] = round(fused_sec, 3)
-    for fr in fused_frames:
-        fr.unpersist()
-
-    # dedup-correction plan (distinct (text, err_key, biz) → Python stages
-    # once per unique → SHUFFLE_HASH join back): the width-invariant-work
-    # variant, priced next to the per-row default.  Fresh seeds so the
-    # default variant's worker memo can't serve it.
-    dd_frames = [
-        gen_transcripts(spark, n_convs=n_convs, seed=s + 240).repartition(128).persist()
-        for s in range(seed_base, seed_base + min(2, n_reps))
-    ]
-    for fr in dd_frames:
-        fr.count()
-    dd_reps = []
-    for fr in dd_frames:
-        t0 = time.perf_counter()
-        correct_pipeline(
-            fr, spark, order_output=True, dedup_correction=True
-        ).agg(F.sum(F.length("text_corrected")), F.count(F.lit(1))).collect()
-        dd_reps.append(time.perf_counter() - t0)
-    timings["flagship_dedup"] = round(min(dd_reps), 3)
-    for fr in dd_frames:
-        fr.unpersist()
-
     # framed scorer backend (tokenize → frame → context-score per row):
     # the T11/T12-wired path, priced next to the char-keyed default.
-    # Fresh seeds so neither earlier variant's row memo can serve it.
+    # Fresh seeds so the flagship reps' row memo can't serve it.
     framed_frames = [
         gen_transcripts(spark, n_convs=n_convs, seed=s + 80).repartition(128).persist()
         for s in range(seed_base, seed_base + min(2, n_reps))
@@ -552,8 +506,6 @@ def _report(
         )[:8]
         noisy_queries = dict(worst)
     out["noisy_queries"] = noisy_queries
-    if "flagship_fused" in timings:
-        out["fused_turns_per_sec"] = round(n_turns / timings["flagship_fused"], 1)
     scaling = _scaling_evidence()
     if scaling is not None:
         out["scaling"] = scaling
@@ -588,7 +540,7 @@ def _report(
         k: out[k]
         for k in (
             "metric", "value", "unit", "queries", "sf", "cpus", "n_turns",
-            "degraded_window", "corrected_turns_per_sec", "fused_turns_per_sec",
+            "degraded_window", "corrected_turns_per_sec",
             "noisy_queries",
         )
         if k in out

@@ -1,4 +1,5 @@
-"""The correction operator: an Arrow-batched scalar pandas UDF.
+"""The correction operator: one Arrow-batched scalar pandas UDF that
+dispatches each row to its corrector (``with_dispatched_correction``).
 
 Design (SURVEY.md §2b F4, §4): NO split/merge of the DataFrame — the
 reference partitions rows into correct/pass lists and re-inserts by index
@@ -11,7 +12,9 @@ Python kernel call.
 
 Dictionaries ride a Spark broadcast; the BK-tree is built lazily once per
 Python worker from the broadcast word list (cheap: ~100 words) and cached.
-The correction itself is embarrassingly parallel — no shuffle.
+The correction itself is embarrassingly parallel — no shuffle.  Each
+Python worker memoizes row results across batches and tasks; this memo is
+the engine's only dedup of repeated rows.
 """
 
 from __future__ import annotations
@@ -111,9 +114,8 @@ def framed_score_rows(
     """Score ``{row_key: (text, errs)}`` through a batch scorer ``fs``
     (FramedTableScorer or NumpyLMScorer — the tokenize → frame → batch
     score contract) with row-level fallback to the char-keyed kernel on
-    misalignment/failure.  Returns ``{row_key: corrected_text}``.  Shared
-    by the staged UDF and the fused mapInArrow stage so both plans score
-    through the identical path (the fused==staged equality contract)."""
+    misalignment/failure.  Returns ``{row_key: corrected_text}``.  Called
+    by the correction UDF for the framed/lm backends' uncached bert rows."""
     keys = list(need)
     try:
         scored = fs.score_sentences(
@@ -140,19 +142,16 @@ def with_dispatched_correction(
     topn: int = 3,
     keywords=KEYWORDS,
     spark: SparkSession | None = None,
-    text_col: str = "text",
-    mode_col: str = "corr_mode",
-    err_col: str = "err_pos",
-    out_col: str = "text_corrected",
     row_counter=None,
     scorer_backend: str = "table",
     scorer_table: dict | None = None,
     context_bigrams: dict | None = None,
     lm_checkpoint: str | None = None,
 ) -> DataFrame:
-    """Single-pass correction with per-row corrector dispatch.
+    """Single-pass correction with per-row corrector dispatch: reads
+    ``text``, ``err_pos`` and ``corr_mode``, adds ``text_corrected``.
 
-    ``mode_col``: 0 = pass-through, 1 = keyword path, 2 = bert path — the
+    ``corr_mode``: 0 = pass-through, 1 = keyword path, 2 = bert path — the
     Spark analog of the reference's biz_type registry
     (corrector/__init__.py:20-38) without per-row Python objects and with
     ONE Arrow transfer for the whole table (vs one per corrector).
@@ -285,38 +284,7 @@ def with_dispatched_correction(
         return pd.Series(out)
 
     return df.withColumn(
-        out_col, correct_udf(F.col(text_col), F.col(err_col), F.col(mode_col))
+        "text_corrected",
+        correct_udf(F.col("text"), F.col("err_pos"), F.col("corr_mode")),
     )
 
-
-def with_correction(
-    df: DataFrame,
-    corrector: str = "keyword",
-    similarity_threshold: float = 0.55,
-    topn: int = 3,
-    keywords=KEYWORDS,
-    spark: SparkSession | None = None,
-    text_col: str = "text",
-    out_col: str = "text_corrected",
-) -> DataFrame:
-    """Single-corrector form (one biz route for the whole table).  Adds
-    ``text_corrected``; requires ``err_pos`` + ``needs_correction`` from
-    error detection.  Delegates to the dispatched operator with a
-    constant-route mode column — same kernels, same memo, no duplicated
-    UDF body."""
-    mode = 1 if corrector == "keyword" else 2
-    tmp = df.withColumn(
-        "_corr_mode",
-        F.when(F.col("needs_correction"), F.lit(mode)).otherwise(F.lit(0)),
-    )
-    out = with_dispatched_correction(
-        tmp,
-        similarity_threshold=similarity_threshold,
-        topn=topn,
-        keywords=keywords,
-        spark=spark,
-        text_col=text_col,
-        mode_col="_corr_mode",
-        out_col=out_col,
-    )
-    return out.drop("_corr_mode")

@@ -10,7 +10,7 @@ by the optimizer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # base_corrector.py:125 — CJK block used by the correctability filters
@@ -52,11 +52,10 @@ def err_prob_key(probs: Column, prob_threshold: float = 0.9) -> Column:
 
         err_from_key(text, err_prob_key(probs, th))
 
-    so the sub-threshold filter exists once (tests/test_dedup_correction.py
-    pins the identity).  The key is text-extraction-independent, so the
-    dedup plan can compute it natively on raw rows and use it as a join
-    key orders of magnitude smaller than the probs array itself
-    (plans/pipeline._dedup_correct_pipeline)."""
+    so the sub-threshold filter exists once (tests/test_plans.py pins the
+    identity).  The key does not depend on extraction, so it can be
+    computed on raw rows, and it is a few ints wide where the probs array
+    holds one double per character."""
     empty = F.array().cast("array<int>")
     idx = F.sequence(F.lit(0), F.size(probs) - 1)
     by_prob = F.when(
@@ -75,31 +74,3 @@ def err_from_key(text: Column, key: Column) -> Column:
     ).otherwise(empty)
     return F.when(key.isNull(), all_pos).otherwise(key)
 
-
-def with_error_detection(
-    df: DataFrame,
-    corrector: str = "keyword",
-    prob_threshold: float = 0.9,
-    max_seq_length: int = 64,
-    text_col: str = "text",
-    probs_col: str = "probs",
-) -> DataFrame:
-    """Adds ``eligible`` (correctability pre-filter), ``err_pos``
-    (array<int> of low-confidence positions) and ``needs_correction``."""
-    text = F.col(text_col)
-    probs = F.col(probs_col)
-    elig = (
-        eligible_keyword(text)
-        if corrector == "keyword"
-        else eligible_bert(text, max_seq_length)
-    )
-    df = df.withColumn("eligible", elig)
-    df = df.withColumn(
-        "err_pos",
-        F.when(F.col("eligible"), err_positions(text, probs, prob_threshold)).otherwise(
-            F.array().cast("array<int>")
-        ),
-    )
-    return df.withColumn(
-        "needs_correction", F.col("eligible") & (F.size("err_pos") > 0)
-    )

@@ -53,9 +53,9 @@ def extract_any(text: str) -> str:
     return extract_main_content(text)
 
 
-def with_extraction(df: DataFrame, text_col: str = "text", out_col: str = "text") -> DataFrame:
+def with_extraction(df: DataFrame, out_col: str = "text") -> DataFrame:
     @F.pandas_udf(StringType())
     def extract_udf(text: pd.Series) -> pd.Series:
         return text.map(extract_any)
 
-    return df.withColumn(out_col, extract_udf(F.col(text_col)))
+    return df.withColumn(out_col, extract_udf(F.col("text")))

@@ -2,18 +2,16 @@
 
 A 100TB training-data pipeline carries media alongside text; this module
 provides the Spark-side plumbing — schema, Arrow batch shape, partition
--friendly UDF signatures — with the codec step STUBBED (image/audio
-libraries are not in this container):
+-friendly UDF signatures — plus a library-free image decode
+(``decode_images``: PPM/BMP through functions/imagecodec.py):
 
 * ``media_schema()``: binary payload + typed metadata struct;
 * ``with_media_metadata``: real, tested: parses a compact deterministic
   header from the binary payload (magic, width, height, n_frames) with a
   vectorized ``mapInPandas`` — the exact batch shape a real decoder UDF
   has;
-* ``decode_image`` / ``extract_audio_features`` / ``sample_video_frames``:
-  clearly-marked stubs that raise NotImplementedError unless the optional
-  library import succeeds; their signatures, return schemas and batching
-  are final.
+* ``sample_video_frames``: which frame indices a decoder would extract,
+  from the header metadata alone.
 
 The synthetic header format (tests/test_multimodal.py): 16 bytes =
 4s magic ('IMG0'/'AUD0'/'VID0') + uint32 width + uint32 height +
@@ -100,13 +98,6 @@ def with_media_metadata(df: DataFrame, content_col: str = "content") -> DataFram
             yield pdf
 
     return df.mapInPandas(parse, out_schema)
-
-
-def _try_import(name: str):
-    try:
-        return __import__(name)
-    except ImportError:
-        return None
 
 
 IMAGE_DECODE_SCHEMA = StructType(
@@ -358,28 +349,6 @@ def q_image_ahash(spark, sf_dir: str) -> DataFrame:
         "doc_id", "width", "height", "ahash",
         n_same.cast("long").alias("n_same_hash"),
     )
-
-
-def decode_image(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Compressed-format decode (JPEG/PNG) requires Pillow — env-gated
-    stub; ``decode_images`` above is the REAL path for library-free
-    formats."""
-    if _try_import("PIL") is None:
-        raise NotImplementedError(
-            "JPEG/PNG decoding requires Pillow, not present in this "
-            "container; use decode_images (PPM/BMP, pure numpy) or install "
-            "a codec library"
-        )
-    raise NotImplementedError("wire PIL.Image.open over the Arrow binary batches")
-
-
-def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """STUB: real impl computes MFCC-style features via an audio lib."""
-    if _try_import("soundfile") is None and _try_import("librosa") is None:
-        raise NotImplementedError(
-            "audio feature extraction requires soundfile/librosa, not present"
-        )
-    raise NotImplementedError("wire the audio decoder over the Arrow binary batches")
 
 
 def sample_video_frames(

@@ -33,12 +33,9 @@ AUDIT_SCHEMA_COLS = (
 
 def _eligible_expr(df: DataFrame):
     # pipeline exports eligibility as corr_mode (0 pass / 1 keyword /
-    # 2 bert) when called with keep_mode_col=True; a boolean `eligible`
-    # column is accepted for hand-built frames
+    # 2 bert) when called with keep_mode_col=True
     if "corr_mode" in df.columns:
         return F.sum((F.col("corr_mode") != 0).cast("long")).alias("n_eligible")
-    if "eligible" in df.columns:
-        return F.sum(F.col("eligible").cast("long")).alias("n_eligible")
     return F.lit(None).cast("long").alias("n_eligible")
 
 

@@ -35,11 +35,6 @@ def main() -> None:
     sections["flagship_correct_pipeline"] = explain(
         correct_pipeline(gen_transcripts(spark, n_convs=100), spark)
     )
-    from ocr_corrector_spark.operators.fused import fused_correct
-
-    sections["flagship_fused_single_pass"] = explain(
-        fused_correct(gen_transcripts(spark, n_convs=100), spark)
-    )
     for name in (
         "pricing_summary",
         "minhash_buckets",

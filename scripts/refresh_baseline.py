@@ -59,8 +59,6 @@ def main() -> None:
         merged["corrected_turns_per_sec"] = round(
             n_turns / queries["flagship_correct"], 1
         )
-    if n_turns and queries.get("flagship_fused"):
-        merged["fused_turns_per_sec"] = round(n_turns / queries["flagship_fused"], 1)
     merged["baseline_runs"] = [
         {
             "flagship_correct": r.get("queries", {}).get("flagship_correct"),

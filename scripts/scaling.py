@@ -270,16 +270,17 @@ def measure_membw(n_workers: int) -> float:
     stream copy is bound by the same resource the Arrow/JVM pipeline is."""
     import multiprocessing
 
+    sys.path.insert(0, REPO)
+    from bench import gather_worker_results
+
     q = multiprocessing.Queue()
     ps = [
         multiprocessing.Process(target=_membw_probe_worker, args=(q,))
         for _ in range(n_workers)
     ]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join()
-    return round(sum(q.get() for _ in range(n_workers)), 2)
+    # four 96 MB copies take about a second; a worker silent for 120 s is
+    # dead or starved
+    return round(sum(gather_worker_results(ps, q, 120.0, "membw probe")), 2)
 
 
 def wait_for_quiet(n: int, max_wait_s: float, poll_s: float) -> bool:
@@ -461,8 +462,7 @@ def write_baseline_md(summary: dict) -> None:
         lines += [
             "",
             f"Headline: {full.get('corrected_turns_per_sec')} corrected turns/s "
-            f"(staged), {full.get('fused_turns_per_sec')} (fused) @ local[{fc}], "
-            f"{full.get('n_turns')} turns.",
+            f"@ local[{fc}], {full.get('n_turns')} turns.",
         ]
     for key in ("workload_note", "companion_note"):
         extra = summary.get(key)

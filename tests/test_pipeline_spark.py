@@ -2,11 +2,13 @@
 oracle (the BASELINE.json contract), order/partitioning invariance, and
 the designed correction outcomes."""
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_corrector_spark.oracle import BertOracle, KeywordOracle
-from ocr_corrector_spark.operators.extract import extract_main_content
+from ocr_corrector_spark.operators.extract import extract_any, extract_main_content
 from ocr_corrector_spark.plans.pipeline import changed_rows, correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
@@ -118,3 +120,54 @@ def test_no_rows_lost(spark):
     out = correct_pipeline(df, spark, order_output=False)
     assert out.count() == n_in
     assert out.filter(F.col("text_corrected").isNull()).count() == 0
+
+
+def test_edge_rows_match_oracle(spark):
+    """Malformed and boundary rows pass through the pipeline under the
+    row-isolation contract: each equals the oracle on its extracted text,
+    null text stays null, and none fails the task."""
+    t = dt.datetime(2026, 1, 1)
+    far = dt.datetime(2600, 1, 1)  # past the pandas ns-timestamp ceiling
+    edge = [
+        # NULL probs → non-prob path marks every position
+        ("edge", 0, "user", "宋还本全", "report", t, None),
+        # empty probs + empty text
+        ("edge", 1, "user", "", "report", t, []),
+        # NULL text
+        ("edge", 2, "user", None, "doc", t, None),
+        # PDF stub passthrough
+        ("edge", 3, "user", "%PDF-1.4 junk", "doc", t, [0.5]),
+        # malformed layout passthrough
+        ("edge", 4, "user", "%LAYOUT v1\nP0 bad", "report", t, [0.5]),
+        # far-future ts
+        ("edge", 5, "user", "宋还本全", "report", far, None),
+    ]
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp, probs array<double>"
+    )
+    df = gen_transcripts(spark, n_convs=20).unionByName(
+        spark.createDataFrame(edge, schema)
+    )
+    out = {
+        r.turn_idx: r
+        for r in correct_pipeline(df, spark)
+        .filter(F.col("conv_id") == "edge")
+        .collect()
+    }
+    assert sorted(out) == [row[1] for row in edge]
+    kw = KeywordOracle(similarity_threshold=0.55)
+    bert = BertOracle()
+    for _, turn_idx, _, raw, tool, ts, probs in edge:
+        r = out[turn_idx]
+        assert r.ts == ts
+        if raw is None:
+            assert r.text is None and r.text_corrected is None
+            continue
+        text = extract_any(raw)
+        assert r.text == text
+        oracle = kw if tool == "report" else bert
+        assert r.text_corrected == oracle.correct_row(text, probs), (turn_idx, r)
+    assert out[0].text_corrected != out[0].text  # non-prob path corrected
+    assert out[3].text_corrected == "%PDF-1.4 junk"
+    assert out[4].text_corrected == "%LAYOUT v1\nP0 bad"

@@ -147,22 +147,3 @@ def test_repetition_score_is_scan_local(spark):
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan and "Python" not in plan
 
-
-def test_dedup_correction_plan_shape(spark):
-    # the dedup plan's 100TB contract: the join back is a SHUFFLED HASH
-    # join (no wide-key sort-merge, no driver-serializing broadcast of the
-    # uniq table), the Python stages (ArrowEvalPython) sit on the build
-    # side only, and the probs arrays never enter the join keys (the
-    # err_prob_key factorization)
-    from ocr_corrector_spark.plans.pipeline import correct_pipeline
-    from ocr_corrector_spark.sources.transcripts import gen_transcripts
-
-    df = gen_transcripts(spark, n_convs=40, seed=3)
-    plan = _plan(correct_pipeline(df, spark, dedup_correction=True))
-    assert "ShuffledHashJoin" in plan, plan[:2000]
-    # no sort-merge join anywhere (the wide-key sort is the failure mode)
-    assert "SortMergeJoin" not in plan, plan[:2000]
-    # dedup aggregation present (the distinct)
-    assert "HashAggregate" in plan
-    # python stages exist (extraction + correction on the uniq side)
-    assert plan.count("ArrowEvalPython") >= 2

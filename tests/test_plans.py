@@ -1,5 +1,5 @@
 """Audit lineage, checkpoint/resume idempotence, ordered-stage
-partitioning, and salted reassembly."""
+partitioning, salted reassembly, and the err-key identity."""
 
 import glob
 import os
@@ -272,3 +272,31 @@ def test_unreadable_watermark_fails_instead_of_rerunning(spark, tmp_path):
     (wm / "notes.txt").write_text("not a parquet file\n")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run.pending_buckets(spark)
+
+
+def test_err_prob_key_identity(spark):
+    # err_positions(text, probs) == err_from_key(text, err_prob_key(probs))
+    # across the edge cases the dedup join key must encode exactly
+    from ocr_corrector_spark.operators.detect import (
+        err_from_key,
+        err_positions,
+        err_prob_key,
+    )
+
+    rows = [
+        ("abc", [0.99, 0.5, 0.99]),
+        ("abc", None),               # null probs -> every position
+        ("", None),                  # null probs, empty text -> empty
+        ("abc", []),                 # empty probs -> empty
+        ("abcd", [0.1, 0.1]),        # probs shorter than text
+        ("ab", [0.95, 0.91, 0.2]),   # probs longer than text
+    ]
+    df = spark.createDataFrame(rows, "text string, probs array<double>")
+    got = df.select(
+        err_positions(F.col("text"), F.col("probs")).alias("direct"),
+        err_from_key(
+            F.col("text"), err_prob_key(F.col("probs"))
+        ).alias("via_key"),
+    ).collect()
+    for r in got:
+        assert r["direct"] == r["via_key"], (r["direct"], r["via_key"])

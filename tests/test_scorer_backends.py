@@ -6,7 +6,6 @@ broadcast into the correction UDF)."""
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_corrector_spark.assets.scorer_table import (
     SCORER_TABLE,
@@ -127,20 +126,3 @@ def test_custom_scorer_table_fully_replaces_builtin(spark):
     ).collect()[0]
     assert out.text_corrected == out.text  # 白 not corrected
 
-
-def test_with_correction_single_route_delegates(spark):
-    """with_correction (single-corrector form) must equal the dispatched
-    operator on a constant route."""
-    from ocr_corrector_spark.operators.correct import with_correction
-    from ocr_corrector_spark.operators.detect import with_error_detection
-
-    df = with_error_detection(
-        gen_transcripts(spark, n_convs=10).filter(F.col("tool") == "report"),
-        corrector="keyword",
-    )
-    out = with_correction(df, corrector="keyword")
-    rows = out.select("text", "text_corrected", "needs_correction").collect()
-    assert rows
-    assert all(r.text == r.text_corrected for r in rows if not r.needs_correction)
-    assert any(r.text != r.text_corrected for r in rows if r.needs_correction)
-    assert "_corr_mode" not in out.columns
