@@ -17,6 +17,7 @@ sides are broadcast; aggregations rely on map-side partial aggregation.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -63,7 +64,8 @@ def q_keyword_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog: levenshtein theta-join of each document's first token against a
     broadcast keyword dimension, counted per keyword."""
     docs = load_table(spark, sf_dir, "documents")
-    kws = spark.createDataFrame([(k,) for k in FUZZY_KEYWORDS], "kw string")
+    # a local relation (LocalTableScan), not a Python-served parallelized RDD
+    kws = spark.createDataFrame(pa.table({"kw": list(FUZZY_KEYWORDS)}), "kw string")
     first = F.element_at(F.split(F.col("text"), " "), 1)
     joined = docs.select(first.alias("tok")).join(
         F.broadcast(kws), F.levenshtein(F.col("tok"), F.col("kw")) <= 1

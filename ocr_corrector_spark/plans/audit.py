@@ -4,7 +4,11 @@ counters at base_corrector.py:58,71 promoted to real aggregates).
 
 Audit rows are written per run: one row per physical input partition
 (``spark_partition_id``) with row/correction counts and key ranges, plus
-a per-biz rollup.  The write is an append to a run-id-partitioned parquet
+a per-biz rollup.  Both tables come from ONE aggregation over the
+corrected frame (grouping sets over partition and ``tool``), collected as
+Arrow — it has at most partitions + tools rows — and written back as
+local relations, so the audit reads a persisted wave once and starts no
+Python worker.  The write is an append to a run-id-partitioned parquet
 table (Iceberg-ready: swap ``.write`` for ``.writeTo`` when an Iceberg
 catalog is configured — this sandbox has no Iceberg runtime jar).
 """
@@ -14,11 +18,14 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-AUDIT_SCHEMA_COLS = (
-    "run_id",
+# lineage and rollup columns between the leading run_id and the trailing
+# created_at (and wave, for checkpoint waves)
+_LINEAGE_COLS = (
     "partition_id",
     "n_rows",
     "n_corrected",
@@ -27,8 +34,13 @@ AUDIT_SCHEMA_COLS = (
     "max_conv_id",
     "min_ts",
     "max_ts",
-    "created_at",
 )
+_ROLLUP_COLS = ("tool", "n_rows", "n_corrected", "n_eligible")
+AUDIT_SCHEMA_COLS = ("run_id", *_LINEAGE_COLS, "created_at")
+
+# grouping_id() of each grouping set: bit 1 is partition_id, bit 0 is tool,
+# and a set bit means the column is aggregated away
+_BY_PARTITION, _BY_TOOL = 1, 2
 
 
 def _eligible_expr(df: DataFrame):
@@ -39,12 +51,20 @@ def _eligible_expr(df: DataFrame):
     return F.lit(None).cast("long").alias("n_eligible")
 
 
-def partition_lineage(df: DataFrame, run_id: str) -> DataFrame:
-    """One audit row per physical partition of the corrected DataFrame."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
+def audit_frames(
+    df: DataFrame, run_id: str, wave=None
+) -> tuple[DataFrame, DataFrame]:
+    """The lineage frame (one row per physical partition of ``df``) and the
+    per-biz rollup frame (one row per ``tool``, the reference's log-only
+    counters at base_corrector.py:58,71 per registry entry).  Runs one
+    aggregation over ``df`` and collects it as Arrow; both frames are
+    local relations over the collected rows.  ``wave`` adds the wave key
+    column that ``write_audit`` partitions by."""
+    agg = (
+        df.withColumn("partition_id", F.spark_partition_id())
+        .groupingSets([["partition_id"], ["tool"]], "partition_id", "tool")
         .agg(
+            F.grouping_id().alias("_set"),
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(
                 (F.col("text") != F.col("text_corrected")).cast("long")
@@ -55,49 +75,26 @@ def partition_lineage(df: DataFrame, run_id: str) -> DataFrame:
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("_pid").alias("partition_id"),
-            "n_rows",
-            "n_corrected",
-            "n_eligible",
-            "min_conv_id",
-            "max_conv_id",
-            "min_ts",
-            "max_ts",
-            F.lit(int(time.time())).alias("created_at"),
-        )
     )
+    table = agg.toArrow()
+    run = F.lit(run_id).alias("run_id")
+    created = F.lit(int(time.time())).alias("created_at")
+    extra = [] if wave is None else [F.lit(int(min(wave))).alias("wave")]
 
+    def local(grouping_set: int, cols: tuple[str, ...]) -> DataFrame:
+        rows = table.filter(pc.equal(table["_set"], grouping_set)).select(cols)
+        frame = df.sparkSession.createDataFrame(
+            rows, StructType([agg.schema[c] for c in cols])
+        )
+        return frame.select(run, *cols, created, *extra)
 
-def biz_rollup(df: DataFrame, run_id: str) -> DataFrame:
-    """Correction metrics per biz/corrector route (`tool` column) — the
-    reference's log-only counters (base_corrector.py:58,71) per registry
-    entry."""
-    return (
-        df.groupBy("tool")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                (F.col("text") != F.col("text_corrected")).cast("long")
-            ).alias("n_corrected"),
-            _eligible_expr(df),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "tool",
-            "n_rows",
-            "n_corrected",
-            "n_eligible",
-            F.lit(int(time.time())).alias("created_at"),
-        )
-    )
+    return local(_BY_PARTITION, _LINEAGE_COLS), local(_BY_TOOL, _ROLLUP_COLS)
 
 
 def write_audit(
     df: DataFrame, run_id: str, audit_path: str, wave=None
 ) -> None:
-    """Write lineage + per-biz rollup audit rows.
+    """Write lineage + per-biz rollup audit rows (``audit_frames``).
 
     ``wave`` (the checkpoint wave's bucket list, plans/checkpoint.py) makes
     the write idempotent per (run_id, wave): rows land in a wave-keyed
@@ -107,30 +104,17 @@ def write_audit(
     ``out_rows == audit sum(n_rows)`` holds across crash/replay, not just
     crash-free.  Without ``wave`` (standalone one-shot audits) the write is
     a plain append."""
-    lineage = partition_lineage(df, run_id)
-    rollup = biz_rollup(df, run_id)
+    lineage, rollup = audit_frames(df, run_id, wave)
     if wave is None:
         parts, mode = ["run_id"], "append"
     else:
-        wave_id = int(min(wave))
-        lineage = lineage.withColumn("wave", F.lit(wave_id))
-        rollup = rollup.withColumn("wave", F.lit(wave_id))
         parts, mode = ["run_id", "wave"], "overwrite"
         df.sparkSession.conf.set(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
-    (
-        lineage.repartition(1)
-        .write.mode(mode)
-        .partitionBy(*parts)
-        .parquet(audit_path)
-    )
-    (
-        rollup.repartition(1)
-        .write.mode(mode)
-        .partitionBy(*parts)
-        .parquet(audit_path.rstrip("/") + "_biz")
-    )
+    biz_path = audit_path.rstrip("/") + "_biz"
+    for frame, path in ((lineage, audit_path), (rollup, biz_path)):
+        frame.coalesce(1).write.mode(mode).partitionBy(*parts).parquet(path)
 
 
 def read_audit(spark, audit_path: str) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,9 +58,19 @@ class CheckpointedRun:
         done = self.committed_buckets(spark)
         return [b for b in range(self.n_buckets) if b not in done]
 
+    def watermark_frame(self, spark: SparkSession, buckets: list[int]) -> DataFrame:
+        """The watermark rows of ``buckets`` as a local relation.  Built
+        from an Arrow table on the driver, the frame plans as a
+        ``LocalTableScan``; a Python list would become a parallelized RDD
+        whose write starts a Python worker to pickle a handful of rows."""
+        bucket_ids = [int(b) for b in buckets]
+        table = pa.table(
+            {"run_id": [self.run_id] * len(bucket_ids), "bucket": bucket_ids}
+        )
+        return spark.createDataFrame(table, _WATERMARK_SCHEMA)
+
     def _commit(self, spark: SparkSession, buckets: list[int]) -> None:
-        rows = [(self.run_id, int(b)) for b in buckets]
-        spark.createDataFrame(rows, _WATERMARK_SCHEMA).coalesce(1).write.mode(
+        self.watermark_frame(spark, buckets).coalesce(1).write.mode(
             "append"
         ).parquet(self.watermark_path)
 
@@ -83,7 +94,11 @@ class CheckpointedRun:
         hook, so the expensive correction UDF executes ONCE per wave: the
         write materializes the cache, the hook's actions read it.  (Calling
         audit writes inside ``transform`` instead would re-execute the full
-        pipeline once per extra action — a 3x compute bill at scale.)"""
+        pipeline once per extra action — a 3x compute bill at scale.)
+
+        Per wave the bookkeeping stays in the JVM: ``write_audit`` reads the
+        cache in one aggregation, and the watermark commit writes a local
+        relation (``watermark_frame``), so neither starts a Python worker."""
         # Idempotence depends on DYNAMIC partition overwrite: with the
         # default static mode every wave's write would wipe the buckets
         # committed by earlier waves.  The session a cluster submit hands

@@ -17,6 +17,7 @@ positions (0.56 / 0.78 are the README's published prob values,
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,12 +88,20 @@ _LAYOUT_SUFFIX = (
 
 
 def corpus_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (i, clean, noisy, errs, biz)
-        for i, (clean, noisy, errs, biz) in enumerate(CORPUS)
-    ]
+    # an Arrow table becomes a local relation (LocalTableScan); a list of
+    # rows would become a parallelized RDD that a Python worker serves
+    clean, noisy, errs, biz = zip(*CORPUS)
+    table = pa.table(
+        {
+            "corpus_idx": list(range(len(CORPUS))),
+            "text_clean": list(clean),
+            "text_noisy": list(noisy),
+            "err_expected": list(errs),
+            "biz": list(biz),
+        }
+    )
     return spark.createDataFrame(
-        rows, "corpus_idx long, text_clean string, text_noisy string, "
+        table, "corpus_idx long, text_clean string, text_noisy string, "
         "err_expected array<int>, biz string"
     )
 

@@ -102,8 +102,8 @@ def main() -> None:
         )
 
     # Audit as a post-write hook: the wave's frame is persisted across the
-    # output write and both audit actions, so the correction UDF runs once
-    # per wave (not 3x).
+    # output write and the audit aggregation, so the correction UDF runs
+    # once per wave (not once per action).
     done = run.run(
         spark,
         df,

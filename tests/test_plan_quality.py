@@ -46,6 +46,44 @@ def test_dictionary_join_broadcasts(spark):
     assert "Broadcast" in plan
 
 
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_driver_built_frames_are_local_relations(spark, tmp_path, arrow):
+    # frames built from driver-side rows (the watermark commit, both audit
+    # tables, the generator's corpus and the keyword dimension) must plan
+    # as LocalTableScan: a list-backed frame plans as ExistingRDD, and
+    # every job over it starts a Python worker to serve a handful of rows.
+    # Holds whether or not Arrow conversion is enabled for pyspark.
+    from pyspark.sql import functions as F
+
+    from ocr_corrector_spark.plans.audit import audit_frames
+    from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
+    from ocr_corrector_spark.sources.transcripts import corpus_df, gen_transcripts
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        run = CheckpointedRun("lt", str(tmp_path / "out"), str(tmp_path / "wm"))
+        wave = gen_transcripts(spark, n_convs=5).withColumn(
+            "text_corrected", F.col("text")
+        )
+        lineage, rollup = audit_frames(wave, "lt", wave=[0])
+        frames = {
+            "watermark": run.watermark_frame(spark, [0, 1]).coalesce(1),
+            "lineage": lineage.coalesce(1),
+            "rollup": rollup.coalesce(1),
+            "corpus_df": corpus_df(spark),
+            "gen_transcripts": gen_transcripts(spark, n_convs=5),
+            "keyword_dim": sqlops.q_keyword_fuzzy_join(spark, SF_DIR),
+        }
+        for name, df in frames.items():
+            plan = _plan(df)
+            assert "LocalTableScan" in plan, (name, plan)
+            assert "ExistingRDD" not in plan, (name, plan)
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_detection_is_native_codegen(spark):
     # the pipeline's detect stage (F1-F3) must stay in native expressions:
     # the plan before the correction UDF carries codegen and NO Python

@@ -11,7 +11,7 @@ from ocr_corrector_spark.operators.reassemble import (
     order_turns,
     reassemble_conversations,
 )
-from ocr_corrector_spark.plans.audit import partition_lineage, write_audit
+from ocr_corrector_spark.plans.audit import write_audit
 from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
@@ -130,8 +130,8 @@ def test_correction_executes_once_per_row_with_audit(spark, tmp_path):
         post_write=lambda out, wave: write_audit(out, "acc1", audit_path, wave=wave),
     )
     assert done == 4
-    # output write + lineage action + biz-rollup action, but the UDF saw
-    # each row exactly once
+    # output write + the single audit aggregation (lineage and biz rollup
+    # as grouping sets), but the UDF saw each row exactly once
     assert acc.value == n_rows
     audit = spark.read.parquet(audit_path)
     assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
@@ -188,6 +188,133 @@ def test_audit_wave_replay_idempotent(spark, tmp_path):
     assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
     biz = spark.read.parquet(audit_path + "_biz")
     assert biz.agg(F.sum("n_rows")).collect()[0][0] == n_rows
+
+
+LINEAGE_SCHEMA = (
+    "struct<partition_id:int,n_rows:bigint,n_corrected:bigint,"
+    "n_eligible:bigint,min_conv_id:string,max_conv_id:string,"
+    "min_ts:timestamp,max_ts:timestamp,created_at:int,run_id:string,wave:int>"
+)
+BIZ_SCHEMA = (
+    "struct<tool:string,n_rows:bigint,n_corrected:bigint,n_eligible:bigint,"
+    "created_at:int,run_id:string,wave:int>"
+)
+
+
+def _driver_side_audit(rows, key, has_mode):
+    """Audit metrics of collected wave rows, grouped on the driver."""
+
+    def total(vals):
+        vals = [int(v) for v in vals if v is not None]
+        return sum(vals) if vals else None
+
+    def extreme(f, vals):
+        vals = [v for v in vals if v is not None]
+        return f(vals) if vals else None
+
+    groups = {}
+    for r in rows:
+        groups.setdefault(r[key], []).append(r)
+    out = {}
+    for k, rs in groups.items():
+        out[k] = {
+            "n_rows": len(rs),
+            "n_corrected": total(
+                r.text != r.text_corrected
+                for r in rs
+                if r.text is not None and r.text_corrected is not None
+            ),
+            "n_eligible": (
+                total(None if r.corr_mode is None else r.corr_mode != 0 for r in rs)
+                if has_mode
+                else None
+            ),
+            "min_conv_id": extreme(min, (r.conv_id for r in rs)),
+            "max_conv_id": extreme(max, (r.conv_id for r in rs)),
+            "min_ts": extreme(min, (r.ts for r in rs)),
+            "max_ts": extreme(max, (r.ts for r in rs)),
+        }
+    return out
+
+
+@pytest.mark.parametrize("keep_mode_col", [True, False])
+def test_audit_equals_driver_side_groups(spark, tmp_path, keep_mode_col):
+    """write_audit's one grouping-sets aggregation must give the same rows
+    as grouping the wave's collected rows on the driver, by
+    spark_partition_id (lineage) and by tool (biz rollup): with a null
+    tool group, with n_eligible NULL when corr_mode is absent, and with
+    min_ts/max_ts intact under a non-UTC session time zone."""
+    tz_key = "spark.sql.session.timeZone"
+    tz = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "Asia/Kolkata")
+    try:
+        wave = (
+            correct_pipeline(
+                gen_transcripts(spark, n_convs=30), spark, keep_mode_col=keep_mode_col
+            )
+            .withColumn("tool", F.when(F.col("turn_idx") % 3 != 0, F.col("tool")))
+            .persist()
+        )
+        rows = wave.withColumn("_pid", F.spark_partition_id()).collect()
+        audit_path = str(tmp_path / "audit")
+        write_audit(wave, "eq", audit_path, wave=[5, 3])
+        lineage = spark.read.parquet(audit_path)
+        biz = spark.read.parquet(audit_path + "_biz")
+        wave.unpersist()
+    finally:
+        spark.conf.set(tz_key, tz)
+
+    assert lineage.schema.simpleString() == LINEAGE_SCHEMA
+    assert biz.schema.simpleString() == BIZ_SCHEMA
+    by_pid = _driver_side_audit(rows, "_pid", keep_mode_col)
+    by_tool = _driver_side_audit(rows, "tool", keep_mode_col)
+    assert None in by_tool and len(by_tool) >= 3
+    got_lineage = lineage.collect()
+    got_biz = biz.collect()
+    for r in got_lineage + got_biz:
+        assert (r.run_id, r.wave) == ("eq", 3) and r.created_at is not None
+    assert {
+        r.partition_id: {k: r[k] for k in by_pid[r.partition_id]} for r in got_lineage
+    } == by_pid
+    assert {
+        r.tool: {k: r[k] for k in ("n_rows", "n_corrected", "n_eligible")}
+        for r in got_biz
+    } == {
+        t: {k: m[k] for k in ("n_rows", "n_corrected", "n_eligible")}
+        for t, m in by_tool.items()
+    }
+    if not keep_mode_col:
+        assert all(r.n_eligible is None for r in got_lineage + got_biz)
+
+
+def test_empty_waves_still_write_and_commit(spark, tmp_path):
+    """More buckets than conversations: most waves are empty, and each
+    still writes its (empty) audit and commits its bucket."""
+    df = gen_transcripts(spark, n_convs=3)
+    n_rows = df.count()
+    run = CheckpointedRun(
+        "empty", str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=8
+    )
+    audit_path = str(tmp_path / "audit")
+    done = run.run(
+        spark,
+        df,
+        lambda d: correct_pipeline(d, spark, keep_mode_col=True),
+        wave_size=1,
+        post_write=lambda out, wave: write_audit(out, "empty", audit_path, wave=wave),
+    )
+    assert done == 8
+    assert run.pending_buckets(spark) == []
+    wm = spark.read.parquet(run.watermark_path)
+    assert wm.schema.simpleString() == "struct<run_id:string,bucket:int>"
+    assert sorted(r.bucket for r in wm.collect()) == list(range(8))
+    assert spark.read.parquet(run.output_path).count() == n_rows
+    for path in (audit_path, audit_path + "_biz"):
+        audit = spark.read.parquet(path)
+        assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
+    assert spark.read.parquet(audit_path).schema.simpleString() == LINEAGE_SCHEMA
+    assert spark.read.parquet(audit_path + "_biz").schema.simpleString() == BIZ_SCHEMA
+    assert run.run(spark, df, lambda d: d) == 0
 
 
 @pytest.mark.parametrize("salt_buckets", [2, 8, 16])
