@@ -8,6 +8,11 @@ Headline = the flagship extraction+correction pipeline over a synthetic
 transcripts table sized from the sf's documents rowcount (the engine's
 BASELINE.md metric: corrected turns/sec), plus the heaviest SQL-analog
 operators (dedup LSH, cosine top-k, salted reassembly, pricing summary).
+The full report (rep timings, capacity probes) goes to a per-process
+temp file named by the printed line's ``full_report``.
+
+``measure_capacity`` and ``subtree_cpu_seconds`` are shared with
+scripts/scaling.py, the N→4N scaling rounds.
 """
 
 from __future__ import annotations
@@ -17,7 +22,17 @@ import multiprocessing
 import os
 import queue
 import sys
+import tempfile
 import time
+
+# Flagship input: SCALE_MULT synthetic conversations per sf document, timed
+# as FLAGSHIP_REPS reps on seeds SEED_BASE, SEED_BASE + 1, ...
+SCALE_MULT = 12
+FLAGSHIP_REPS = 3
+SEED_BASE = 1
+# A rep counts as quiet when both bracketing capacity probes read at least
+# this many burn-loops/s per core.
+CAP_FLOOR_PER_CORE = 1.5
 
 # A burn is 5M integer multiply-adds (under a second on an idle core); a
 # worker that has not reported after this long is dead or starved, not slow.
@@ -34,12 +49,12 @@ def _burn(q):
 
 def subtree_cpu_seconds() -> float:
     """CPU seconds (utime+stime) of this process's whole subtree — the JVM
-    plus every pyspark.daemon Python worker it forked (same method as
-    scripts/scaling_diagnosis.py).  Snapshot deltas taken IMMEDIATELY
-    around a timed rep measure the ENGINE's CPU for that rep: burn-probe
-    processes run outside the snapshots and have exited by snapshot time,
-    so they never contaminate the delta — unlike getrusage(RUSAGE_CHILDREN),
-    which accumulates every reaped child including the probes."""
+    plus every pyspark.daemon Python worker it forked.  Snapshot deltas
+    taken IMMEDIATELY around a timed rep measure the ENGINE's CPU for that
+    rep: burn-probe processes run outside the snapshots and have exited
+    by snapshot time, so they never contaminate the delta — unlike
+    getrusage(RUSAGE_CHILDREN), which accumulates every reaped child
+    including the probes."""
     tck = os.sysconf("SC_CLK_TCK")
 
     def children(pid):
@@ -112,7 +127,7 @@ def measure_capacity(n_workers: int, with_burn: bool = False):
     ``with_burn``: also return the mean per-process burn DURATION — fixed
     work per process, so its growth with worker count measures the host's
     CPU-time inflation under concurrency (frequency scaling / SMT sibling
-    contention).  The scaling driver divides the engine's CPU
+    contention).  scripts/scaling.py divides the engine's CPU
     work-invariance ratio by this hardware inflation: what remains is
     engine overhead, not silicon physics."""
     q = multiprocessing.Queue()
@@ -147,40 +162,18 @@ def main() -> None:
 
     # --- headline: correction throughput ---------------------------------
     n_docs = load_table(spark, sf_dir, "documents").count()
-    # SPARK_GRAFT_SCALE_MULT scales the synthetic input (scaling runs use a
-    # larger multiple so compute dominates fixed per-job overhead)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "12"))
-    n_convs = max(200, n_docs * mult)
+    n_convs = max(200, n_docs * SCALE_MULT)
     # One frame PER REP, distinct seeds: the correction stage memoizes row
     # results inside each Python worker (legitimate for repetitive OCR
     # boilerplate), so timing the SAME input repeatedly would measure the
     # memo, not the engine.  Distinct seeds give same-shaped, textually
     # distinct inputs — each rep is an honest cold-data run.
-    # Fixed 128-partition input regardless of core count: scaling runs
-    # compare local[N] vs local[4N] on the SAME materialized input — if the
-    # partition count tracked cores, the small config would run few fat
-    # partitions with terrible straggler sensitivity and the ratio would
-    # measure load balance, not the engine.
-    # SPARK_GRAFT_FLAGSHIP_REPS/SEED_BASE let the scaling driver run short
-    # interleaved N/4N rounds (same seed both configs per round) — this
-    # sandbox's background contention varies on a minutes timescale, so
-    # two long sequential phases would measure the machine, not scaling.
-    # SPARK_GRAFT_INPUT_DIR: pre-materialized frames on disk (written once
-    # by the scaling driver) — drops per-round datagen cost so interleaved
-    # rounds are short enough that host conditions can't drift mid-round.
-    n_reps = int(os.environ.get("SPARK_GRAFT_FLAGSHIP_REPS", "3"))
-    seed_base = int(os.environ.get("SPARK_GRAFT_SEED_BASE", "1"))
-    input_dir = os.environ.get("SPARK_GRAFT_INPUT_DIR")
-    if input_dir:
-        frames = [
-            spark.read.parquet(os.path.join(input_dir, f"seed{s}")).persist()
-            for s in range(seed_base, seed_base + n_reps)
-        ]
-    else:
-        frames = [
-            gen_transcripts(spark, n_convs=n_convs, seed=s).repartition(128).persist()
-            for s in range(seed_base, seed_base + n_reps)
-        ]
+    # Fixed 128-partition input regardless of core count, so runs at
+    # different widths time the same input layout.
+    frames = [
+        gen_transcripts(spark, n_convs=n_convs, seed=s).repartition(128).persist()
+        for s in range(SEED_BASE, SEED_BASE + FLAGSHIP_REPS)
+    ]
     n_turns = frames[0].count()  # materialize outside the timed region
     for fr in frames[1:]:
         fr.count()
@@ -201,20 +194,13 @@ def main() -> None:
             cpus * 2
         )
     )
-    # Quiet-window protocol (VERDICT r02 #6): capacity probes BRACKET every
-    # flagship rep; a rep whose bracket dips below the floor ran in a
-    # degraded host window and is RERUN on a fresh seed (bounded retries) —
-    # so the committed flagship number is a quiet-window measurement or an
-    # explicit degraded marker, never a silent artifact of shared-host load.
-    cap_floor = float(os.environ.get("SPARK_GRAFT_CAP_FLOOR_PER_CORE", "1.5")) * cpus
-    max_retries = int(os.environ.get("SPARK_GRAFT_REP_RETRIES", "2"))
-    scaling_mode = bool(os.environ.get("SPARK_GRAFT_SKIP_QUERIES"))
-    reps, rep_probes, degraded_reps = [], [], 0
+    # Capacity probes BRACKET every flagship rep; a rep whose bracket dips
+    # below the floor ran in a degraded host window and is marked so, and
+    # the headline takes the min over the quiet reps only.
+    cap_floor = CAP_FLOOR_PER_CORE * cpus
+    reps, rep_probes = [], []
     cap, burn = measure_capacity(cpus, with_burn=True)
-    retry_seed = seed_base + 1000
-    queue = list(frames)
-    while queue:
-        fr = queue.pop(0)
+    for fr in frames:
         pre, burn_pre = cap, burn
         c0 = subtree_cpu_seconds()
         t0 = time.perf_counter()
@@ -224,7 +210,6 @@ def main() -> None:
         cap, burn = measure_capacity(cpus, with_burn=True)
         post, burn_post = cap, burn
         fr.unpersist()
-        quiet = min(pre, post) >= cap_floor
         rep_probes.append(
             {
                 "pre": pre,
@@ -233,29 +218,10 @@ def main() -> None:
                 "burn_post": burn_post,
                 "sec": round(wall, 3),
                 "engine_cpu_sec": round(rep_cpu, 1),
-                "quiet": quiet,
+                "quiet": min(pre, post) >= cap_floor,
             }
         )
         reps.append(wall)
-        # retries only in full-bench mode: the scaling driver has its own
-        # round gates and must see every rep it asked for
-        if not quiet and not scaling_mode and degraded_reps < max_retries:
-            degraded_reps += 1
-            # retry frame must match the TIMED input's size: with a
-            # pre-materialized input dir the local n_convs (default mult)
-            # can be smaller than the materialized frames, and a smaller
-            # retry frame would inflate corrected_turns_per_sec
-            retry_n = (
-                fr.select(F.countDistinct("conv_id")).collect()[0][0]
-                if input_dir
-                else n_convs
-            )
-            nf = gen_transcripts(
-                spark, n_convs=retry_n, seed=retry_seed
-            ).repartition(128).persist()
-            retry_seed += 1
-            nf.count()
-            queue.append(nf)
     # min over quiet-bracketed reps when any exist (the steady-state
     # estimator this sandbox's sporadic stalls demand); if NO rep had a
     # quiet bracket, fall back to min of all and mark the window degraded
@@ -267,31 +233,18 @@ def main() -> None:
     timings["flagship_correct"] = round(correct_sec, 3)
     flagship_reps = [round(r, 3) for r in reps]
     caps = [rep_probes[0]["pre"]] + [p["post"] for p in rep_probes]
-    # engine CPU of the headline rep — the scaling driver's work-invariance
-    # numerator/denominator (JVM + Python workers; probes excluded) — plus
-    # the bracketing probes' mean per-process burn duration (the hardware
-    # CPU-time-inflation reference for the same window)
+    # engine CPU of the headline rep (JVM + Python workers; probes
+    # excluded) and the bracketing probes' mean per-process burn duration
+    # (the host's CPU-time inflation reference for the same window)
     flagship_engine_cpu = best["engine_cpu_sec"]
     flagship_probe_burn = round((best["burn_pre"] + best["burn_post"]) / 2, 4)
-
-    # The scorer-backend variants below are skipped in scaling rounds
-    # (SKIP_QUERIES): the scaling ratio only needs the flagship.
-    if scaling_mode:
-        _report(
-            timings, sf, cpus, n_turns, flagship_reps, caps, correct_sec,
-            rep_probes, degraded_window,
-            flagship_engine_cpu=flagship_engine_cpu,
-            flagship_probe_burn=flagship_probe_burn,
-        )
-        spark.stop()
-        return
 
     # framed scorer backend (tokenize → frame → context-score per row):
     # the T11/T12-wired path, priced next to the char-keyed default.
     # Fresh seeds so the flagship reps' row memo can't serve it.
     framed_frames = [
         gen_transcripts(spark, n_convs=n_convs, seed=s + 80).repartition(128).persist()
-        for s in range(seed_base, seed_base + min(2, n_reps))
+        for s in range(SEED_BASE, SEED_BASE + 2)
     ]
     for fr in framed_frames:
         fr.count()
@@ -310,7 +263,7 @@ def main() -> None:
     # masked positions) — priced next to the stand-ins.  Fresh seeds again.
     lm_frames = [
         gen_transcripts(spark, n_convs=n_convs, seed=s + 160).repartition(128).persist()
-        for s in range(seed_base, seed_base + min(2, n_reps))
+        for s in range(SEED_BASE, SEED_BASE + 2)
     ]
     for fr in lm_frames:
         fr.count()
@@ -326,7 +279,7 @@ def main() -> None:
         fr.unpersist()
 
     # --- SQL-analog operators (steady state: warm once, median of 3) ------
-    query_names = () if os.environ.get("SPARK_GRAFT_SKIP_QUERIES") else (
+    query_names = (
         "minhash_buckets",
         "ngram_jaccard",
         "cosine_topk",
@@ -408,9 +361,11 @@ def main() -> None:
 
 
 def _scaling_evidence() -> dict | None:
-    """The committed gated scaling artifact (scripts/scaling.py →
-    BENCH/scaling_evidence.json), embedded so the per-round bench JSON
-    carries the N→4N evidence itself."""
+    """The frozen gated scaling record of the 32-core host
+    (BENCH/scaling_evidence.json: 292 local[4]→local[16] rounds), embedded
+    so the bench JSON carries the N→4N evidence itself.  Rounds on the
+    current host go to BENCH/scaling_local{N}_{4N}.json
+    (scripts/scaling.py)."""
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling_evidence.json"
     )
@@ -513,23 +468,12 @@ def _report(
     # Full report (probes, gate definitions, scaling detail) goes to a file;
     # the driver's stdout capture keeps only a 2000-char tail, so the final
     # printed line must stay compact or the per-round artifact loses the
-    # queries map (BENCH_r03.json parsed: null).  The COMMITTED copy
-    # (BENCH/last_bench.json) is only written on an explicit refresh
-    # (SPARK_GRAFT_BENCH_COMMIT=1); ad-hoc/concurrent runs default to a
-    # per-PID temp path so they never clobber or race on the tracked
-    # artifact.
-    if os.environ.get("SPARK_GRAFT_BENCH_OUT"):
-        full_path = os.environ["SPARK_GRAFT_BENCH_OUT"]
-    elif os.environ.get("SPARK_GRAFT_BENCH_COMMIT"):
-        full_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_bench.json"
-        )
-    else:
-        import tempfile
-
-        full_path = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_bench_{os.getpid()}.json"
-        )
+    # queries map (BENCH_r03.json parsed: null).  The path is per-PID, so
+    # concurrent runs never race and the tracked BENCH/last_bench.json is
+    # never overwritten.
+    full_path = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_bench_{os.getpid()}.json"
+    )
     try:
         with open(full_path, "w") as f:
             json.dump(out, f, indent=1)

@@ -1,211 +1,112 @@
 #!/usr/bin/env python3
-"""Scaling-efficiency evidence (BASELINE.json north_rule: throughput
-scaling efficiency >= 0.8 from N to 4N executors).
+"""N→4N scaling rounds on this host, with engine CPU per row per layer.
 
-No real cluster exists in this sandbox, so per the documented protocol
-(BASELINE.md) the same job runs at two parallelism levels — local[N] and
-local[4N] — each in a fresh subprocess (fresh JVM), on the same
-pre-materialized 128-partition input.
+    python scripts/scaling.py ROUNDS
 
-This sandbox is a SHARED host: deliverable CPU capacity swings on a
-minutes timescale (steal + frequency scaling), so a single N-phase
-followed by a 4N-phase measures the machine, not the engine.  The
-protocol is therefore GATED and round-structured:
-
-* one round = three back-to-back fresh-JVM benches on the SAME seed
-  input: N (pre) → 4N → N (post).  The 4N run sits BETWEEN the two N
-  runs, so any host-condition shift that could distort the ratio also
-  shows up as N-pre/N-post disagreement;
-* round gate (all must hold, thresholds stated in the artifact):
-    G1  stability   |thr_N_pre − thr_N_post| / max ≤ STABILITY_TOL
-    G2  N not starved    min(capacity probes @ N workers) ≥ CAP_N_MIN_PER_WORKER · N
-    G3  4N offered cores min(cap @ 4N) / min(cap @ N) ≥ CAP_RATIO_MIN
-  min, not max: the probes BRACKET each timed rep, so a round where
-  capacity collapsed mid-rep (first probe quiet, second degraded) must
-  fail the gate — both brackets have to be quiet.
-  G2/G3 use the pure-Python burn probe (bench.py measure_capacity) taken
-  immediately around each timed rep.  G2 blocks the false-POSITIVE mode
-  (a background-loaded host suppresses the small config and inflates the
-  ratio); G1/G3 block noise-poisoned rounds in either direction;
-* raw efficiency is computed from SAME-ROUND pairs only:
-  eff = thr_4N / (4 · mean(thr_N_pre, thr_N_post));
-* the loop runs until the MEDIAN of gated rounds reaches the ≥ 0.8
-  target with at least SCALING_MIN_ROUNDS gated rounds (or
-  SCALING_MAX_ATTEMPTS rounds); EVERY round is recorded in the artifact —
-  gated and ungated, median and best — nothing is dropped, and the
-  HEADLINE is the gated median, never a best-of-N pick.  Each round also
-  records the engine's CPU work-invariance (bench.py
-  flagship_engine_cpu_sec at 4N vs N) as a first-class gated metric.
-
-Writes BENCH/scaling_evidence.json (the committed artifact bench.py
-embeds into the driver-visible bench JSON) and regenerates
-BENCH/BASELINE.md from the same data.  Nothing in the generated files is
-hard-coded from past sessions.
+N is a quarter of the cores this process may use.  A round runs the job
+at N (pre), 4N and N (post), each in a fresh process (fresh JVM) on one
+fixed ``gen_transcripts`` input, timing three plan prefixes into a noop
+sink (``order_turns``, + ``with_extraction``, the full ``correct_pipeline``)
+in wall time and engine CPU (``bench.subtree_cpu_seconds``), with capacity
+probes (``bench.measure_capacity``) around the full run.  Gates and
+formulas are those of the frozen 32-core record (BENCH/scaling_evidence.json).
+Each round rewrites BENCH/scaling_local{N}_{4N}.json with all rounds so far.
 """
 
-from __future__ import annotations
-
+import contextlib
 import json
 import os
-import shutil
+import signal
 import statistics
 import subprocess
 import sys
 import time
-from datetime import datetime, timezone
+from pathlib import Path
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-INPUT_DIR = os.environ.get("SCALING_INPUT_DIR", "/tmp/spark_graft_scaling_input")
-ARTIFACT = os.path.join(REPO, "BENCH", "scaling_evidence.json")
+HERE = Path(__file__).resolve().parent
+REPO = HERE.parent
 
-# Gate thresholds (see module docstring).
-STABILITY_TOL = float(os.environ.get("SCALING_STABILITY_TOL", "0.10"))
-# G2 floor scales with the probe's worker count: a quiet burn probe reads
-# ~2.6-3.4 loops/s PER WORKER on this host (round-2 calibration at both
-# 4 and 8 workers); below ~2.6/worker the small config was starved.
-CAP_N_MIN_PER_WORKER = float(
-    os.environ.get("SCALING_CAP_N_MIN_PER_WORKER", "2.6")
-)
-CAP_RATIO_MIN = float(os.environ.get("SCALING_CAP_RATIO_MIN", "2.5"))
+STABILITY_TOL = 0.10
+CAP_N_MIN_PER_WORKER = 2.6
+CAP_RATIO_MIN = 2.5
 TARGET_EFF = 0.8
-# CPU work-invariance: the ENGINE's CPU for the timed rep (bench.py
-# flagship_engine_cpu_sec — a /proc subtree snapshot delta around the rep,
-# covering the JVM and every pyspark.daemon worker, excluding the burn
-# probes) at 4N vs the mean of the two N runs.  A scalable engine does the
-# SAME total work at both parallelism levels; <= 1.25 allows JVM/GC/
-# scheduler overhead of the wider config.  This is the metric a loaded
-# shared host CANNOT distort: wall-clock efficiency tracks delivered
-# cores, CPU work tracks the engine.
-WORK_INVARIANCE_MAX = float(os.environ.get("SCALING_WORK_INVARIANCE_MAX", "1.25"))
+N_CONVS = 20_000  # about 130k turns
+SEED = 1
+# a local[1] run takes about two minutes; one still running after this is hung
+CHILD_TIMEOUT_S = 900
+# layer -> (the timed prefix before it, the timed prefix that ends with it)
+LAYERS = {"order": (None, "order"), "extract": ("order", "extract"),
+          "detect_correct": ("extract", "full")}
 
 
-def _bench_subprocess(env: dict) -> dict:
-    """Run bench.py and return its FULL report.  bench.py's stdout line is
-    compact (the driver's 2000-char tail) — the complete report (probes,
-    rep timings) goes to the file named by SPARK_GRAFT_BENCH_OUT, which we
-    point at a per-invocation temp path so concurrent benches never race."""
-    import tempfile
+def child(cpus: int) -> dict:
+    """One timed run at local[cpus]; meant for a fresh process."""
+    sys.path.insert(0, str(REPO))
+    from bench import measure_capacity, subtree_cpu_seconds
+    from ocr_corrector_spark.operators.extract import with_extraction
+    from ocr_corrector_spark.operators.reassemble import order_turns
+    from ocr_corrector_spark.plans.pipeline import correct_pipeline
+    from ocr_corrector_spark.session import get_spark
+    from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
-    fd, full_out = tempfile.mkstemp(prefix="bench_full_", suffix=".json")
-    os.close(fd)
-    env = dict(env, SPARK_GRAFT_BENCH_OUT=full_out)
+    spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    plans = {"order": order_turns,
+             "extract": lambda d: with_extraction(order_turns(d)),
+             "full": lambda d: correct_pipeline(d, spark)}
+    df = gen_transcripts(spark, n_convs=N_CONVS, seed=SEED).repartition(128).persist()
+    n_turns = df.count()
+    wall, cpu = {}, {}
+
+    def timed(name, frame=df):
+        c0, t0 = subtree_cpu_seconds(), time.perf_counter()
+        plans[name](frame).write.format("noop").mode("overwrite").save()
+        wall[name] = round(time.perf_counter() - t0, 3)
+        cpu[name] = round(subtree_cpu_seconds() - c0, 2)
+
+    # warm-up on a disjoint seed; the timed full run below overwrites it
+    timed("full", gen_transcripts(spark, n_convs=max(64, cpus * 8), seed=99)
+          .repartition(cpus * 2))
+    timed("order")
+    timed("extract")
+    cap_pre, burn_pre = measure_capacity(cpus, with_burn=True)
+    timed("full")
+    cap_post, burn_post = measure_capacity(cpus, with_burn=True)
+    spark.stop()
+    return {"cpus": cpus, "n_turns": n_turns, "wall_s": wall, "cpu_s": cpu,
+            "thr": round(n_turns / wall["full"], 1), "probes": [cap_pre, cap_post],
+            "burn_s": round((burn_pre + burn_post) / 2, 4)}
+
+
+def run_child(cpus: int) -> dict:
+    code = (f"import json, sys; sys.path.insert(0, {str(HERE)!r}); import scaling; "
+            f"print(json.dumps(scaling.child({cpus})))")
+    p = subprocess.Popen([sys.executable, "-c", code], text=True, stdout=subprocess.PIPE,
+                         cwd=REPO, start_new_session=True)  # workers import from cwd
     try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            env=env,
-            capture_output=True,
-            text=True,
-            check=True,
-            cwd=REPO,
-        )
-        try:
-            with open(full_out) as f:
-                return json.load(f)
-        except Exception:
-            line = [
-                l for l in out.stdout.strip().splitlines() if l.startswith("{")
-            ][-1]
-            return json.loads(line)
-    finally:
-        try:
-            os.unlink(full_out)
-        except OSError:
-            pass
+        out, _ = p.communicate(timeout=CHILD_TIMEOUT_S)
+    finally:  # the child's session also holds its JVM
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(p.pid, signal.SIGKILL)
+        p.wait(timeout=60)
+    if p.returncode:
+        raise RuntimeError(f"local[{cpus}] run exited with {p.returncode}")
+    return json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
 
 
-def run_bench(cpus: int, sf_dir: str, seed: int, reps: int = 1) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_SCALE_MULT=os.environ.get("SPARK_GRAFT_SCALE_MULT", "48"),
-        SPARK_GRAFT_FLAGSHIP_REPS=str(reps),
-        SPARK_GRAFT_SEED_BASE=str(seed),
-        SPARK_GRAFT_INPUT_DIR=INPUT_DIR,
-        SPARK_GRAFT_SKIP_QUERIES="1",
-    )
-    return _bench_subprocess(env)
+def measures(r: dict) -> tuple[float, float, float, float]:
+    """(stability, min capacity at N, capacity ratio 4N/N, eff) of a round."""
+    pre, post = r["thr_N_pre"], r["thr_N_post"]
+    cap_n = min(r["cap_probes_N_pre"] + r["cap_probes_N_post"])
+    cap_ratio = min(r["cap_probes_4N"]) / cap_n if cap_n else 0.0
+    eff = r["thr_4N"] / (4 * ((pre + post) / 2))
+    return abs(pre - post) / max(pre, post), cap_n, cap_ratio, eff
 
 
-def run_full_bench(cpus: int, sf_dir: str) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_SEED_BASE="1",
-        SPARK_GRAFT_FLAGSHIP_REPS="3",
-        SPARK_GRAFT_INPUT_DIR=INPUT_DIR,
-    )
-    env.pop("SPARK_GRAFT_SKIP_QUERIES", None)
-    env.pop("SPARK_GRAFT_SCALE_MULT", None)
-    return _bench_subprocess(env)
-
-
-def prepare_input(sf_dir: str, n_seeds: int) -> None:
-    """Materialize the distinct-seed input frames once (128 partitions)."""
-    if os.path.isdir(INPUT_DIR) and len(os.listdir(INPUT_DIR)) >= n_seeds:
-        return
-    shutil.rmtree(INPUT_DIR, ignore_errors=True)
-    code = f"""
-import sys
-sys.path.insert(0, {REPO!r})
-from ocr_corrector_spark.session import get_spark
-from ocr_corrector_spark.sources.tables import load_table
-from ocr_corrector_spark.sources.transcripts import gen_transcripts
-spark = get_spark(app_name="scaling-datagen", cpus=32)
-spark.sparkContext.setLogLevel("ERROR")
-n_docs = load_table(spark, {sf_dir!r}, "documents").count()
-mult = int({os.environ.get("SPARK_GRAFT_SCALE_MULT", "48")!r})
-n_convs = max(200, n_docs * mult)
-for s in range(1, {n_seeds} + 1):
-    (gen_transcripts(spark, n_convs=n_convs, seed=s).repartition(128)
-     .write.mode("overwrite").parquet({INPUT_DIR!r} + f"/seed{{s}}"))
-spark.stop()
-"""
-    subprocess.run([sys.executable, "-c", code], check=True, cwd=REPO)
-
-
-def run_round(n: int, sf_dir: str, seed: int) -> dict:
-    """One gated round: N (pre) → 4N → N (post), same seed, fresh JVMs."""
-    t0 = datetime.now(timezone.utc).isoformat(timespec="seconds")
-    b_pre = run_bench(n, sf_dir, seed=seed)
-    b_4n = run_bench(4 * n, sf_dir, seed=seed)
-    b_post = run_bench(n, sf_dir, seed=seed)
-    t1 = datetime.now(timezone.utc).isoformat(timespec="seconds")
-    cpu_n_pre = b_pre.get("flagship_engine_cpu_sec") or 0.0
-    cpu_4n = b_4n.get("flagship_engine_cpu_sec") or 0.0
-    cpu_n_post = b_post.get("flagship_engine_cpu_sec") or 0.0
-    work_invariance = (
-        round(cpu_4n / ((cpu_n_pre + cpu_n_post) / 2), 3)
-        if cpu_n_pre + cpu_n_post > 0
-        else None
-    )
-    # hardware CPU-time inflation for FIXED work under 4x concurrency
-    # (frequency scaling / SMT): per-process burn duration of the probes
-    # bracketing the same timed reps.  Dividing the engine's raw ratio by
-    # it isolates ENGINE overhead from silicon physics.
-    burn_n_pre = b_pre.get("flagship_probe_burn_sec")
-    burn_4n = b_4n.get("flagship_probe_burn_sec")
-    burn_n_post = b_post.get("flagship_probe_burn_sec")
-    hw_cpu_inflation = None
-    work_invariance_adj = None
-    if burn_n_pre and burn_n_post and burn_4n:
-        hw_cpu_inflation = round(burn_4n / ((burn_n_pre + burn_n_post) / 2), 3)
-        if work_invariance is not None and hw_cpu_inflation > 0:
-            work_invariance_adj = round(work_invariance / hw_cpu_inflation, 3)
-
-    thr_pre = b_pre["corrected_turns_per_sec"]
-    thr_4n = b_4n["corrected_turns_per_sec"]
-    thr_post = b_post["corrected_turns_per_sec"]
-    # min over the bracketing probes: capacity must hold BEFORE AND AFTER
-    # every timed rep of the round (a mid-round collapse fails the gate)
-    cap_n = min(b_pre["hw_capacity_probes"] + b_post["hw_capacity_probes"])
-    cap_4n = min(b_4n["hw_capacity_probes"])
-
-    stability = abs(thr_pre - thr_post) / max(thr_pre, thr_post)
-    cap_ratio = cap_4n / cap_n if cap_n else 0.0
-    eff = thr_4n / (4 * ((thr_pre + thr_post) / 2))
-
+def gate_failures(r: dict, n: int) -> list[str]:
+    """G1 N pre/post agree, G2 N was not starved, G3 4N got ~4x capacity."""
+    stability, cap_n, cap_ratio, _ = measures(r)
     cap_n_min = CAP_N_MIN_PER_WORKER * n
     fails = []
     if stability > STABILITY_TOL:
@@ -214,327 +115,39 @@ def run_round(n: int, sf_dir: str, seed: int) -> dict:
         fails.append(f"G2 cap_N {cap_n:.1f} < {cap_n_min}")
     if cap_ratio < CAP_RATIO_MIN:
         fails.append(f"G3 cap_ratio {cap_ratio:.2f} < {CAP_RATIO_MIN}")
-
-    return {
-        "seed": seed,
-        "started_utc": t0,
-        "finished_utc": t1,
-        "thr_N_pre": thr_pre,
-        "thr_4N": thr_4n,
-        "thr_N_post": thr_post,
-        "n_turns": b_pre["n_turns"],
-        "cap_probes_N_pre": b_pre["hw_capacity_probes"],
-        "cap_probes_4N": b_4n["hw_capacity_probes"],
-        "cap_probes_N_post": b_post["hw_capacity_probes"],
-        "stability": round(stability, 4),
-        "cap_ratio": round(cap_ratio, 3),
-        # the host's OWN scaling for a coordination-free busy loop in this
-        # round's window: burn throughput at 4N workers / (4 x at N).  The
-        # engine cannot beat the host's deliverable-CPU ratio; eff >= this
-        # means zero engine-added scaling overhead.
-        "host_probe_eff": round(cap_ratio / 4, 3),
-        "raw_efficiency": round(eff, 3),
-        "cpu_sec_N_pre": round(cpu_n_pre, 1),
-        "cpu_sec_4N": round(cpu_4n, 1),
-        "cpu_sec_N_post": round(cpu_n_post, 1),
-        "work_invariance_raw": work_invariance,
-        "hw_cpu_inflation": hw_cpu_inflation,
-        "work_invariance": (
-            work_invariance_adj if work_invariance_adj is not None else work_invariance
-        ),
-        "gated": not fails,
-        "gate_failures": fails,
-    }
+    return fails
 
 
-def _membw_probe_worker(q, mb: int = 96, reps: int = 4):
-    """One worker of the memory-bandwidth probe: stream-copy a buffer too
-    large for LLC and report achieved GB/s for this process."""
-    import numpy as np
-
-    a = np.arange(mb * 1024 * 1024 // 8, dtype=np.int64)
-    b = np.empty_like(a)
-    t0 = time.perf_counter()
-    for _ in range(reps):
-        np.copyto(b, a)
-        a[0] += 1  # defeat any elision
-    dt = time.perf_counter() - t0
-    q.put(reps * 2 * a.nbytes / dt / 1e9)
-
-
-def measure_membw(n_workers: int) -> float:
-    """Aggregate streamed memory bandwidth (GB/s) for n_workers concurrent
-    copy loops.  The ALU burn probe the gates use cannot sense co-tenant
-    MEMORY-subsystem pressure (BENCH/SCALING_DIAGNOSIS.md: 08-18 windows
-    pass the burn gates while the engine's 4N CPU inflates 1.4-2.5x); a
-    stream copy is bound by the same resource the Arrow/JVM pipeline is."""
-    import multiprocessing
-
-    sys.path.insert(0, REPO)
-    from bench import gather_worker_results
-
-    q = multiprocessing.Queue()
-    ps = [
-        multiprocessing.Process(target=_membw_probe_worker, args=(q,))
-        for _ in range(n_workers)
-    ]
-    # four 96 MB copies take about a second; a worker silent for 120 s is
-    # dead or starved
-    return round(sum(gather_worker_results(ps, q, 120.0, "membw probe")), 2)
+def round_record(n: int, runs: dict, started: str) -> dict:
+    pre, wide, post = runs["N_pre"], runs["4N"], runs["N_post"]
+    r = {"seed": SEED, "started_utc": started, "finished_utc": _now(),
+         "n_turns": pre["n_turns"], "thr_N_pre": pre["thr"], "thr_4N": wide["thr"],
+         "thr_N_post": post["thr"], "cap_probes_N_pre": pre["probes"],
+         "cap_probes_4N": wide["probes"], "cap_probes_N_post": post["probes"]}
+    stability, _, cap_ratio, eff = measures(r)
+    cpu_n = (pre["cpu_s"]["full"] + post["cpu_s"]["full"]) / 2
+    wi_raw = round(wide["cpu_s"]["full"] / cpu_n, 3)
+    hw = round(wide["burn_s"] / ((pre["burn_s"] + post["burn_s"]) / 2), 3)
+    fails = gate_failures(r, n)
+    r.update(stability=round(stability, 4), cap_ratio=round(cap_ratio, 3),
+             host_probe_eff=round(cap_ratio / 4, 3), raw_efficiency=round(eff, 3),
+             work_invariance_raw=wi_raw, hw_cpu_inflation=hw,
+             work_invariance=round(wi_raw / hw, 3), gated=not fails,
+             gate_failures=fails, layers=_layers(runs), runs=runs)
+    return r
 
 
-def wait_for_quiet(n: int, max_wait_s: float, poll_s: float) -> bool:
-    """Wait (bounded) for a host window in which a round could plausibly
-    gate AND measure scaling rather than neighbor pressure.  Three probes,
-    all taken at the widths the round will use:
-
-    * ALU capacity at N and 4N workers (the same burn probe the gates
-      use) against floors that default to the gate floors but may be set
-      STRICTER via SCALING_QUIET_CAP_N_MIN / SCALING_QUIET_RATIO_MIN —
-      waiting for a genuinely quiet window biases WHEN we measure, never
-      WHAT we keep;
-    * aggregate streamed memory bandwidth at 4N workers against
-      SCALING_QUIET_MEMBW_MIN GB/s (0 = disabled): the contention mode
-      the ALU probe is blind to (see SCALING_DIAGNOSIS.md).
-
-    This is a PRE-round decision on host condition only — it never sees a
-    round's outcome, so it cannot select results; it just stops us
-    burning three 2-minute Spark benches (and adding our own load) into a
-    window that cannot yield clean evidence.  Every probe is logged to
-    stderr as a JSON line; --merge ignores them (no raw_efficiency/gated
-    keys).  Returns True if a quiet window was seen, False if the wait
-    budget expired (the round runs anyway — the gates still decide)."""
-    sys.path.insert(0, REPO)
-    from bench import measure_capacity
-
-    cap_n_floor = float(
-        os.environ.get("SCALING_QUIET_CAP_N_MIN", CAP_N_MIN_PER_WORKER * n)
-    )
-    ratio_floor = float(os.environ.get("SCALING_QUIET_RATIO_MIN", CAP_RATIO_MIN))
-    membw_floor = float(os.environ.get("SCALING_QUIET_MEMBW_MIN", "0"))
-
-    deadline = time.time() + max_wait_s
-    while True:
-        cap_n = measure_capacity(n)
-        cap_4n = measure_capacity(4 * n)
-        ratio = cap_4n / cap_n if cap_n else 0.0
-        membw = measure_membw(4 * n) if membw_floor > 0 else None
-        quiet = (
-            cap_n >= cap_n_floor
-            and ratio >= ratio_floor
-            and (membw is None or membw >= membw_floor)
-        )
-        print(
-            json.dumps(
-                {
-                    "probe_wait": True,
-                    "utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
-                    "cap_n": cap_n,
-                    "cap_4n": cap_4n,
-                    "cap_ratio": round(ratio, 3),
-                    "membw_4n_gbps": membw,
-                    "quiet": quiet,
-                }
-            ),
-            file=sys.stderr,
-            flush=True,
-        )
-        if quiet:
-            return True
-        if time.time() + poll_s > deadline:
-            return False
-        time.sleep(poll_s)
-
-
-def write_artifact(summary: dict, suffix: str = "") -> None:
-    os.makedirs(os.path.dirname(ARTIFACT), exist_ok=True)
-    with open(ARTIFACT + suffix, "w") as f:
-        json.dump(summary, f, indent=2)
-
-
-def write_baseline_md(summary: dict) -> None:
-    n = summary["n_cores"]
-    n4 = summary["n4_cores"]
-    sel = summary.get("best_gated_round")
-    wi = summary.get("work_invariance", {})
-    rounds = summary["rounds"]
-    full = summary.get("bench_4N_full") or {}
-    lines = [
-        f"# BENCH/BASELINE — measured numbers ({summary['generated_utc'][:10]})",
-        "",
-        "Protocol (BASELINE.md; scripts/scaling.py): the reference publishes no",
-        "benchmark numbers, so the baseline is driver-defined — corrected turns/sec",
-        "on the synthetic OCR-noised transcripts table with per-turn equality vs",
-        "reference semantics, and N→4N scaling efficiency evidenced by running the",
-        f"identical job at `local[{n}]` and `local[{n4}]` (fresh JVM each) on the same",
-        "pre-materialized 128-partition input.  This file is fully generated from",
-        "measured data; nothing in it is carried over from earlier sessions.",
-        "",
-        "**Gated rounds** (shared-host protocol): one round = N(pre) → 4N → N(post)",
-        "back-to-back on the same seed; a round counts as evidence only if",
-        f"G1 |ΔN-pre/post| ≤ {summary['gate']['stability_tol']},",
-        f"G2 min capacity probe @ {n} workers ≥ {summary['gate']['cap_n_min']},",
-        f"G3 capacity ratio 4N/N ≥ {summary['gate']['cap_ratio_min']}",
-        "(burn-probe capacities taken immediately around each timed rep).",
-        "Raw efficiency per round = thr(4N) / (4 · mean(thr_N_pre, thr_N_post)) —",
-        "same-round pairs only.  HEADLINES are MEDIANS over gated rounds, never a",
-        "best-of-N pick; the per-round CPU work-invariance ratio — the timed rep's",
-        "engine CPU (/proc subtree: JVM + Python workers, probes excluded) at 4N",
-        "vs N, normalized by the host's own CPU-time inflation for fixed work",
-        "under 4x concurrency (probe burn durations) — is a first-class gated",
-        "metric: ~1.0 means the engine does the same total work at both widths,",
-        "so any wall-clock shortfall is delivered-core capacity, not engine",
-        "structure.",
-        "",
-        "| metric | value |",
-        "|---|---|",
-        f"| input turns | {summary['n_turns']} |",
-        f"| sf dir | {summary['sf_dir']} |",
-        f"| rounds run / gated | {len(rounds)} / {summary['n_gated']} |",
-        f"| **median raw efficiency — gated rounds (HEADLINE)** | **{summary['median_eff_gated']}** |",
-        f"| median raw efficiency — gated ∧ work-invariance ≤ {wi.get('target_max')} (measurement-certified subset; n={summary.get('n_gated_wi_clean')}) | {summary.get('median_eff_gated_wi_clean')} |",
-        f"| target | ≥ {TARGET_EFF} |",
-        f"| **wall-clock target met (median, gated)** | **{summary['meets_target']}** |",
-        f"| **median CPU work-invariance — gated (HEADLINE)** | **{wi.get('median_gated')}** |",
-        f"| work-invariance target | ≤ {wi.get('target_max')} |",
-        f"| **work-invariance target met (median, gated)** | **{wi.get('meets_target')}** |",
-        f"| median raw efficiency — all rounds | {summary['median_eff_all']} |",
-        f"| best raw efficiency — all rounds (supporting detail) | {summary['best_eff_all']} |",
-    ]
-    hc = summary.get("host_ceiling") or {}
-    if hc.get("n_gated"):
-        wi_blk = hc.get("gated_wi_le_1p1", {})
-        lines += [
-            "",
-            "**Host ceiling (same-round paired comparison)**: cap_ratio/4 is the",
-            "host's OWN N→4N scaling efficiency for a coordination-free Python",
-            "busy loop, measured by the probes bracketing the engine's timed reps",
-            "in the SAME round.  No workload — including an embarrassingly",
-            "parallel loop with zero shuffles, zero JVM, zero coordination — can",
-            "scale past the host's CPU-delivery ratio; an engine that matches or",
-            "beats it adds NO scaling overhead of its own.",
-            "",
-            "| host-ceiling metric | value |",
-            "|---|---|",
-            f"| median host busy-loop efficiency — gated rounds | {hc['median_host_probe_eff_gated']} |",
-            f"| median host busy-loop efficiency — all rounds | {hc['median_host_probe_eff_all']} |",
-            f"| median (engine eff − host busy-loop eff), gated | {hc['median_eng_minus_host_gated']} |",
-            f"| gated rounds where engine ≥ host busy-loop | {hc['n_gated_engine_ge_host']} / {hc['n_gated']} |",
-            f"| gated ∧ work-invariance ≤ 1.1: engine ≥ host | {wi_blk.get('n_engine_ge_host')} / {wi_blk.get('n')} |",
-            f"| · their median engine eff / host busy-loop eff | {wi_blk.get('median_eff')} / {wi_blk.get('median_host_probe_eff')} |",
-        ]
-    if sel:
-        lines += [
-            f"| best gated round (supporting detail; seed {sel['seed']}, {sel['started_utc']}) | eff {sel['raw_efficiency']:.3f} |",
-            f"| · corrected turns/sec @ local[{n}] (pre / post) | {sel['thr_N_pre']} / {sel['thr_N_post']} |",
-            f"| · corrected turns/sec @ local[{n4}] | {sel['thr_4N']} |",
-            f"| · per-core turns/sec @ local[{n}] / local[{n4}] | {(sel['thr_N_pre'] + sel['thr_N_post']) / (2 * n):.1f} / {sel['thr_4N'] / n4:.1f} |",
-            f"| · capacity probes N pre/4N/N post | {sel['cap_probes_N_pre']} / {sel['cap_probes_4N']} / {sel['cap_probes_N_post']} |",
-        ]
-    lines += [
-        "",
-        "All rounds (chronological; gate failures shown):",
-        "",
-        "| seed | start (UTC) | thr N pre | thr 4N | thr N post | eff | host eff | work-inv | gated |",
-        "|---|---|---|---|---|---|---|---|---|",
-    ]
-    for r in rounds:
-        g = "yes" if r["gated"] else "; ".join(r["gate_failures"])
-        hpe = r.get("host_probe_eff")
-        if hpe is None and r.get("cap_ratio"):
-            hpe = round(r["cap_ratio"] / 4, 3)
-        lines.append(
-            f"| {r['seed']} | {r['started_utc']} | {r['thr_N_pre']} | "
-            f"{r['thr_4N']} | {r['thr_N_post']} | {r['raw_efficiency']} | "
-            f"{hpe} | {r.get('work_invariance')} | {g} |"
-        )
-    if full.get("queries"):
-        fc = full.get("cpus", n4)
-        lines += [
-            "",
-            f"Per-query wall seconds @ local[{fc}], sf {full.get('sf')} "
-            "(min of 5 after warm; flagship min of 3 distinct-seed reps):",
-            "",
-            "| query | sec |",
-            "|---|---|",
-        ]
-        lines += [f"| {k} | {v} |" for k, v in full["queries"].items()]
-        lines += [
-            "",
-            f"Headline: {full.get('corrected_turns_per_sec')} corrected turns/s "
-            f"@ local[{fc}], {full.get('n_turns')} turns.",
-        ]
-    for key in ("workload_note", "companion_note"):
-        extra = summary.get(key)
-        if extra:
-            lines += ["", extra]
-    lines.append("")
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines))
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n = int(os.environ.get("SCALING_N", "8"))
-    max_attempts = int(os.environ.get("SCALING_MAX_ATTEMPTS", "24"))
-    min_rounds = int(os.environ.get("SCALING_MIN_ROUNDS", "3"))
-    n_seeds = int(os.environ.get("SCALING_N_SEEDS", "6"))
-    full_bench = os.environ.get("SCALING_FULL_BENCH", "1") == "1"
-    prepare_input(sf_dir, n_seeds)
-
-    quiet_wait_s = float(os.environ.get("SCALING_QUIET_WAIT_S", "0"))
-    quiet_poll_s = float(os.environ.get("SCALING_QUIET_POLL_S", "30"))
-    rounds: list[dict] = []
-    for attempt in range(1, max_attempts + 1):
-        seed = (attempt - 1) % n_seeds + 1
-        if quiet_wait_s > 0:
-            wait_for_quiet(n, quiet_wait_s, quiet_poll_s)
-        r = run_round(n, sf_dir, seed)
-        rounds.append(r)
-        print(json.dumps({"attempt": attempt, **r}), file=sys.stderr, flush=True)
-        # incremental checkpoint: a kill mid-hunt must never discard
-        # completed rounds (the artifact is rewritten with the final
-        # summary below once the loop ends)
-        # checkpoint to a SIDE file: the committed artifact must never be
-        # clobbered by a mid-hunt partial (a concurrent bench.py would
-        # embed a junk scaling block, and an add -A would commit it)
-        write_artifact({"partial": True, "rounds": rounds}, suffix=".partial")
-        gated_so_far = [x for x in rounds if x["gated"]]
-        med_eff = med([x["raw_efficiency"] for x in gated_so_far])
-        # stop when the MEDIAN of gated rounds meets target with enough
-        # evidence — never on a single lucky round (best-of-N is not the
-        # headline; ADVICE r02)
-        if (
-            len(gated_so_far) >= min_rounds
-            and med_eff is not None
-            and med_eff >= TARGET_EFF
-        ):
-            break
-        time.sleep(int(os.environ.get("SCALING_SLEEP", "5")))
-
-    summary = build_summary(rounds, n, sf_dir)
-    # Hunt runs write their FINAL summary to the side file too: the
-    # committed artifact aggregates EVERY round across hunts and is only
-    # (re)written by --merge, so a finishing 4-attempt chunk must not
-    # replace 200+ merged rounds with its own 4.  Durable evidence is the
-    # per-round stderr JSON lines; the side file is a convenience.
-    # SCALING_WRITE_COMMITTED=1 restores the old single-hunt behavior.
-    write_committed = os.environ.get("SCALING_WRITE_COMMITTED", "0") == "1"
-    suffix = "" if write_committed else ".partial"
-    # write the rounds FIRST — a failure in the optional full bench must
-    # never discard hours of gated-round evidence
-    write_artifact(summary, suffix=suffix)
-    if write_committed:
-        write_baseline_md(summary)
-    if full_bench:
-        try:
-            summary["bench_4N_full"] = run_full_bench(4 * n, sf_dir)
-            write_artifact(summary, suffix=suffix)
-            if write_committed:
-                write_baseline_md(summary)
-        except Exception as exc:
-            print(f"full bench failed (rounds already written): {exc}", file=sys.stderr)
-    print(json.dumps(summary))
+def _layers(runs: dict) -> dict:
+    """Engine CPU µs per row of each layer at N (mean of pre, post), at 4N."""
+    out = {}
+    for layer, (lo, hi) in LAYERS.items():
+        us = {k: 1e6 * (run["cpu_s"][hi] - run["cpu_s"].get(lo, 0.0)) / run["n_turns"]
+              for k, run in runs.items()}
+        at_n = (us["N_pre"] + us["N_post"]) / 2
+        out[layer] = {"cpu_us_per_row_N": round(at_n, 2),
+                      "cpu_us_per_row_4N": round(us["4N"], 2),
+                      "ratio_4N_over_N": round(us["4N"] / at_n, 3) if at_n > 0 else None}
+    return out
 
 
 def med(vals):
@@ -542,194 +155,46 @@ def med(vals):
     return round(statistics.median(vals), 3) if vals else None
 
 
-def _host_ceiling(rounds: list[dict], gated: list[dict]) -> dict:
-    """The host-ceiling argument (VERDICT r03 next-round #2b), computed
-    from data every round already records: cap_ratio/4 is the burn-probe
-    (pure Python busy loop, zero coordination) N→4N scaling efficiency
-    measured INSIDE the same round that timed the engine.  If the engine's
-    wall-clock efficiency meets or beats the host's own busy-loop scaling
-    while its CPU work stays parallelism-invariant, the gap to the 0.8
-    target is deliverable-CPU physics of this shared host, not engine
-    structure — no workload, including an embarrassingly parallel loop,
-    can scale past the host's CPU-delivery ratio."""
-
-    def hpe(r):
-        return (r.get("cap_ratio") or 0.0) / 4
-
-    paired_gated = [(r["raw_efficiency"], hpe(r)) for r in gated if r.get("cap_ratio")]
-    wi_ok = [
-        r
-        for r in gated
-        if r.get("work_invariance") is not None and r["work_invariance"] <= 1.1
-    ]
-    return {
-        "definition": (
-            "host_probe_eff = (min burn-probe loops/s @4N workers) / "
-            "(4 x min @N workers), probes bracketing the same timed reps "
-            "(= cap_ratio/4): the host's own scaling for a coordination-"
-            "free CPU burn in that round's window.  engine_ge_host = "
-            "raw_efficiency >= host_probe_eff for the same round."
-        ),
-        "median_host_probe_eff_gated": med([h for _, h in paired_gated]),
-        "median_host_probe_eff_all": med([hpe(r) for r in rounds if r.get("cap_ratio")]),
-        "median_eng_minus_host_gated": med([e - h for e, h in paired_gated]),
-        "n_gated_engine_ge_host": sum(1 for e, h in paired_gated if e >= h),
-        "n_gated": len(gated),
-        "gated_wi_le_1p1": {
-            "n": len(wi_ok),
-            "n_engine_ge_host": sum(
-                1 for r in wi_ok if r["raw_efficiency"] >= hpe(r)
-            ),
-            "median_eff": med([r["raw_efficiency"] for r in wi_ok]),
-            "median_host_probe_eff": med([hpe(r) for r in wi_ok]),
-        },
-    }
-
-
-def build_summary(rounds: list[dict], n: int, sf_dir: str) -> dict:
+def summarize(rounds: list[dict]) -> dict:
     gated = [r for r in rounds if r["gated"]]
-    best_gated = max(gated, key=lambda x: x["raw_efficiency"]) if gated else None
-    median_eff_gated = med([r["raw_efficiency"] for r in gated])
-    median_work_gated = med([r["work_invariance"] for r in gated])
-    # the wi-CLEAN gated subset: G1-G3 bracket the reps with probes, but a
-    # concurrent load spike BETWEEN probes can still pass them while
-    # inflating the 4N rep — the round's own work-invariance (engine CPU
-    # 4N vs N, hardware-normalized) certifies the measurement itself.
-    # wi has been first-class since round 3; every round is committed
-    # either way, this is an additional honest cut, not a filter.
-    wi_clean = [
-        r
-        for r in gated
-        if r.get("work_invariance") is not None
-        and r["work_invariance"] <= WORK_INVARIANCE_MAX
-    ]
-    median_eff_gated_wi_clean = med([r["raw_efficiency"] for r in wi_clean])
-
+    eff_gated = med(r["raw_efficiency"] for r in gated)
+    paired = [(r["raw_efficiency"], r["cap_ratio"] / 4) for r in gated]
     return {
-        "generated_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
-        "sf_dir": sf_dir,
-        "n_cores": n,
-        "n4_cores": 4 * n,
-        "n_turns": rounds[0]["n_turns"] if rounds else None,
-        "gate": {
-            "stability_tol": STABILITY_TOL,
-            "cap_n_min": CAP_N_MIN_PER_WORKER * int(os.environ.get("SCALING_N", "8")),
-            "cap_n_min_per_worker": CAP_N_MIN_PER_WORKER,
-            "cap_ratio_min": CAP_RATIO_MIN,
-            "definition": (
-                "round = N(pre)->4N->N(post) same-seed fresh-JVM benches; "
-                "G1 |thr_N_pre-thr_N_post|/max<=tol; G2 min cap probe@N>=cap_n_min; "
-                "G3 min cap@4N / min cap@N >= cap_ratio_min (probes bracket "
-                "each timed rep; min = capacity held through the whole round); "
-                "eff = thr_4N/(4*mean(thr_N_pre,thr_N_post)); work_invariance = "
-                "childCPU(4N)/mean(childCPU(N_pre),childCPU(N_post))"
-            ),
-        },
-        "rounds": rounds,
-        "n_gated": len(gated),
-        # HEADLINE = the MEDIAN of gated rounds, not a best-of-N pick
-        # (ADVICE r02 / VERDICT r02 #7); the best round is supporting detail
-        "raw_efficiency": median_eff_gated,
-        "median_eff_gated": median_eff_gated,
-        "median_eff_gated_wi_clean": median_eff_gated_wi_clean,
-        "n_gated_wi_clean": len(wi_clean),
-        "median_eff_all": med([r["raw_efficiency"] for r in rounds]),
-        "best_eff_all": max((r["raw_efficiency"] for r in rounds), default=None),
-        "best_gated_round": best_gated,
-        "target": TARGET_EFF,
-        "meets_target": bool(
-            median_eff_gated is not None and median_eff_gated >= TARGET_EFF
-        ),
-        # first-class companion metric: engine CPU work is parallelism-
-        # invariant — the scaling signal a loaded shared host cannot fake
-        "work_invariance": {
-            "median_gated": median_work_gated,
-            "median_all": med([r["work_invariance"] for r in rounds]),
-            "target_max": WORK_INVARIANCE_MAX,
-            "meets_target": bool(
-                median_work_gated is not None
-                and median_work_gated <= WORK_INVARIANCE_MAX
-            ),
-            "definition": (
-                "total engine CPU seconds of the timed rep (JVM + Python "
-                "workers; /proc subtree snapshot deltas, probes excluded) "
-                "at 4N divided by the mean of the two N runs, then divided "
-                "by the host's own CPU-time inflation for fixed work under "
-                "4x concurrency (per-process burn duration of the probes "
-                "bracketing the same reps); ~1.0 = the engine does the "
-                "same total work at both widths, so wall-clock efficiency "
-                "is bounded by delivered cores, not engine structure; "
-                "per-round raw ratio and hw inflation are both recorded"
-            ),
-        },
-        # the paired engine-vs-host comparison (same-round, same-window):
-        # the second acceptance path of VERDICT r03 #2
-        "host_ceiling": _host_ceiling(rounds, gated),
+        "rounds_run": len(rounds), "n_gated": len(gated),
+        "median_eff_gated": eff_gated, "target": TARGET_EFF,
+        "median_eff_all": med(r["raw_efficiency"] for r in rounds),
+        "meets_target": eff_gated is not None and eff_gated >= TARGET_EFF,
+        "work_invariance_median_gated": med(r["work_invariance"] for r in gated),
+        "host_eff_gated": med(h for _, h in paired),
+        "eng_ge_host_gated": f"{sum(e >= h for e, h in paired)}/{len(gated)}",
+        # over all rounds: the gates screen wall time, not CPU per row
+        "layer_cpu_ratio_4N_over_N_all": {
+            layer: med(r["layers"][layer]["ratio_4N_over_N"] for r in rounds if "layers" in r)
+            for layer in LAYERS},
     }
 
 
-def main_merge(paths: list[str]) -> None:
-    """Re-summarize rounds from one or more hunt logs (the per-round JSON
-    lines scaling.py prints to stderr) into a single artifact.  Every
-    round from every log is kept — merging ADDS evidence, it never
-    selects; gates were already applied per round at measurement time and
-    are identical across logs (asserted below via the recorded fields).
-    Rounds may come from different workload sizes (n_turns differs);
-    efficiency and work-invariance are scale-free ratios, and each
-    round's n_turns rides along for provenance.  An existing artifact's
-    trailing full bench is preserved."""
-    rounds: list[dict] = []
-    for p in paths:
-        with open(p) as f:
-            for line in f:
-                line = line.strip()
-                if not line.startswith("{"):
-                    continue
-                r = json.loads(line)
-                if "raw_efficiency" in r and "gated" in r:
-                    r.pop("attempt", None)
-                    rounds.append(r)
-    seen = set()
-    deduped = []
-    for r in sorted(rounds, key=lambda x: x["started_utc"]):
-        if r["started_utc"] in seen:
-            continue
-        seen.add(r["started_utc"])
-        deduped.append(r)
-    n = int(os.environ.get("SCALING_N", "8"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    summary = build_summary(deduped, n, sf_dir)
-    summary["merged_from_logs"] = [os.path.basename(p) for p in paths]
-    summary["workloads_n_turns"] = sorted({r["n_turns"] for r in deduped})
-    if os.path.exists(ARTIFACT):
-        with open(ARTIFACT) as f:
-            prior = json.load(f)
-        if prior.get("bench_4N_full"):
-            summary["bench_4N_full"] = prior["bench_4N_full"]
-        if prior.get("companion_note"):
-            summary["companion_note"] = prior["companion_note"]
-    if len(summary["workloads_n_turns"]) > 1:
-        summary["workload_note"] = (
-            f"Rounds merged across hunts at {len(summary['workloads_n_turns'])} workload sizes "
-            f"({', '.join(str(t) for t in summary['workloads_n_turns'])} turns); "
-            "efficiency and work-invariance are scale-free same-round ratios, and "
-            "each round records its own n_turns. The large-workload hunts ran in a "
-            "visibly degraded host window (capacity probes 8-13 burn-loops/s at 4 "
-            "workers vs ~13-15 quiet); rounds whose 4N engine CPU blew up 2.5-6x "
-            "all coincide with collapsed probes and are rejected by the gates — "
-            "same-size 4N runs in sane windows match N-run CPU within 5% "
-            "(work-invariance 0.93-1.04), so the blowups measure host memory-"
-            "bandwidth contention, not engine structure."
-        )
-    write_artifact(summary)
-    write_baseline_md(summary)
-    print(json.dumps({k: summary[k] for k in (
-        "n_gated", "median_eff_gated", "median_eff_all", "meets_target",
-        "workloads_n_turns")}))
+def _now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%S+00:00", time.gmtime())
+
+
+def main() -> None:
+    if len(sys.argv) != 2 or not sys.argv[1].isdigit():
+        sys.exit("usage: python scripts/scaling.py ROUNDS")
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
+    path = REPO / "BENCH" / f"scaling_local{n}_{4 * n}.json"
+    rounds = json.loads(path.read_text())["rounds"] if path.exists() else []
+    gate = {"stability_tol": STABILITY_TOL, "cap_n_min": CAP_N_MIN_PER_WORKER * n,
+            "cap_ratio_min": CAP_RATIO_MIN}
+    for _ in range(int(sys.argv[1])):
+        started = _now()
+        runs = {"N_pre": run_child(n), "4N": run_child(4 * n), "N_post": run_child(n)}
+        rounds.append(round_record(n, runs, started))
+        summary = {"generated_utc": _now(), "n_cores": n, "n4_cores": 4 * n,
+                   "n_convs": N_CONVS, "gate": gate, **summarize(rounds)}
+        path.write_text(json.dumps({**summary, "rounds": rounds}, indent=1))
+        print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--merge":
-        main_merge(sys.argv[2:])
-    else:
-        main()
+    main()
